@@ -6,9 +6,12 @@ warm-median-of-3 posture as graft.Bench's headline numbers.
 Usage:
   python3 scripts/bench_duck.py <sfDir> <oracle_sql_json> [out_json]
 
-out_json defaults to BENCH_DUCK.json in the cwd.
+out_json defaults to BENCH_DUCK.json in the cwd. The frozen and naive
+query sets come from query_sets.json, which graft.Verify writes next to
+oracle_sql.json.
 """
 import json
+import os
 import sys
 import time
 
@@ -17,57 +20,26 @@ import duckdb
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-# FROZEN round-15 bench membership — the fixed denominator for the
-# round-over-round trend (twin of graft.Bench.frozenR15; never edit).
-FROZEN_R15 = {
-    "a12_freq_infer", "a12_freq_modal", "a13_rollup", "a14_approx_distinct",
-    "a14_distinct_exact", "a15_quantiles", "a16_corr", "a17_cube",
-    "a18_string_agg", "a1_distinct", "a20_histogram", "a21_grouping_sets",
-    "a22_forecast_metrics", "a23_metric_box", "a3_resample_sum", "a4_asfreq",
-    "a5_bounds", "a7a8_stats", "a9_mae", "audit_dist_drift",
-    "audit_snapshot_diff", "dedup_bloom_cross", "dedup_cluster_stats",
-    "dedup_clusters", "dedup_containment", "dedup_corpus_overlap",
-    "dedup_cross_minhash", "dedup_edit_pairs", "dedup_embedding",
-    "dedup_embedding_lsh", "dedup_end_to_end", "dedup_exact",
-    "dedup_keep_best", "dedup_minhash_lsh", "dedup_minhash_pairs_portable",
-    "dedup_minhash_portable", "dedup_minhash_sigs", "dedup_ngram_jaccard",
-    "dedup_paragraphs", "dedup_semantic", "dedup_simhash",
-    "dedup_simhash_pairs", "dedup_simhash_pairs_portable",
-    "dedup_simhash_portable", "dedup_soft_weights", "dedup_source_overlap",
-    "dedup_spans", "f11_json", "f13_list_hof", "f14_datefuncs",
-    "f15_conditional", "f16_regex", "f17_array_setops", "f1_dates",
-    "f6_minmax", "j1_surrogate_key", "j2_calendar_fill", "j3_positional",
-    "j4_asof", "j5_band_join", "j6_q5_region", "j7_asof_forward",
-    "j8_asof_tolerance", "j9_interval", "mm_features", "o10_keyset",
-    "o11_global_rank", "o2_head", "o3_top1", "o5_reverse", "o6_topk_group",
-    "o7_page", "o8_topk_native", "o9_topk_ranked", "p10_sample",
-    "p11_stratified", "p12_shard_assign", "p13_source_cap",
-    "p14_weighted_sample", "p5_dedup_first", "p9_pivot", "pack_bins",
-    "pipeline_curate", "pipeline_pack", "pipeline_wet", "q1_agg",
-    "q3_star_join", "ret_bm25", "ret_bm25_diverse", "ret_bm25_serve",
-    "ret_tfidf", "ret_tfidf_serve", "sim_hard_negatives", "sim_ivf_portable",
-    "sim_ivf_topk", "sim_ivfpq_serve", "sim_ivfpq_topk", "sim_lsh_portable",
-    "sim_lsh_topk", "sim_source_drift", "sim_topk", "text_boilerplate",
-    "text_bpe", "text_c4", "text_chunks", "text_clf_sample",
-    "text_clf_score", "text_compression", "text_contamination",
-    "text_contamination_report", "text_decontaminate_fuzzy", "text_dsir",
-    "text_epoch_mix", "text_fingerprint", "text_gopher", "text_html_strip",
-    "text_langid", "text_langid_para", "text_lm_bigram", "text_lm_buckets",
-    "text_lm_ngram", "text_lm_quality", "text_mixture", "text_mixture_temp",
-    "text_normalize", "text_pack_bpe", "text_pack_ids", "text_phrase_gate",
-    "text_prune_by_source", "text_quality", "text_quality_prune",
-    "text_quantile_norm", "text_redact", "text_repetition",
-    "text_source_profile", "text_span_dedup", "text_tokens",
-    "text_unigram_tok", "text_vocab", "u1_union", "u2_anti", "u3_setops",
-    "u4_semi", "url_blocklist", "url_domain_gate", "url_domain_stats",
-    "url_host_cap", "w10_range_frame", "w11_value_windows", "w1_windows",
-    "w2_seq_stats", "w3_slice", "w4_xy", "w5_split", "w6_weekend",
-    "w7_horizon", "w8_session", "w9_ranks"}
+
+def load_query_sets(oracle_path):
+    """The frozen round-15 membership and the declared-naive replay set,
+    written by graft.Verify as query_sets.json next to oracle_sql.json
+    (graft.Bench.frozenR15 and SparkEntry.naiveOracleReplay are the one
+    copy)."""
+    path = os.path.join(os.path.dirname(os.path.abspath(oracle_path)),
+                        "query_sets.json")
+    if not os.path.exists(path):
+        sys.exit(f"[bench_duck] {path} not found: run graft.Verify into "
+                 "the directory that holds oracle_sql.json first")
+    with open(path) as f:
+        sets = json.load(f)
+    return set(sets["frozen_r15"]), set(sets["naive_oracle_replay"])
 
 
 def main():
     sf_dir, oracle_path = sys.argv[1], sys.argv[2]
     out_path = sys.argv[3] if len(sys.argv) > 3 else "BENCH_DUCK.json"
+    frozen_r15, naive = load_query_sets(oracle_path)
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
@@ -79,12 +51,11 @@ def main():
     # (the declared-naive replay oracles are hours-scale in DuckDB at
     # sf1.0 — skip them there; they are excluded from every honest total
     # anyway)
-    import os
     only_env = os.environ.get("GRAFT_DUCK_ONLY") or ""
     skip = {s for s in
             (os.environ.get("GRAFT_DUCK_SKIP") or "").split(",") if s}
     if only_env == "@frozen_r15":
-        oracle = {k: v for k, v in oracle.items() if k in FROZEN_R15}
+        oracle = {k: v for k, v in oracle.items() if k in frozen_r15}
     elif only_env:
         keep = {s for s in only_env.split(",") if s}
         for unknown in sorted(keep - set(oracle)):
@@ -117,21 +88,17 @@ def main():
     # these oracles are declared-naive kernel replays (per-pixel dHash
     # CTEs, per-gram LM expansion, the recursive curate CTE) — their
     # duck time measures the replay, not a real query, and flatters any
-    # spark/duck aggregate. Keep in lockstep with
-    # SparkEntry.naiveOracleReplay.
-    naive = {"pipeline_curate_portable", "text_lm_ngram", "mm_image_dhash",
-             "mm_image_neardup", "mm_video_dedup", "pipeline_media_curate",
-             "mm_image_dhash_cross"}
+    # spark/duck aggregate.
     total_honest = sum(t for q, t in queries.items()
                        if q not in naive and t >= 0)
-    # fixed-denominator twin of graft.Bench.frozenR15 (keep in lockstep):
+    # fixed-denominator twin of graft.Bench's frozen totals:
     # totals over the frozen round-15 membership, so the round-over-round
     # spark/duck trend is immune to suite growth. This side only has
     # oracle rows, matching Bench's frozen ∩ oracleSql restriction.
     total_frozen = sum(t for q, t in queries.items()
-                       if q in FROZEN_R15 and t >= 0)
+                       if q in frozen_r15 and t >= 0)
     total_frozen_honest = sum(t for q, t in queries.items()
-                              if q in FROZEN_R15 and q not in naive
+                              if q in frozen_r15 and q not in naive
                               and t >= 0)
     out = {"metric": "duckdb_oracle_total", "value": round(total, 6),
            "unit": "sec", "sf": sf_dir, "queries": queries,

@@ -8,9 +8,9 @@ object Bench {
     * (codecs, WARC, portable twins) that dilute the aggregate ratio by
     * arithmetic alone (r15 1.19× → r17 1.55× honest excl-naive with no
     * per-query regression), so the headline trend is computed over THIS
-    * set forever: apples-to-apples regardless of suite growth. Keep in
-    * lockstep with FROZEN_R15 in scripts/bench_duck.py. Never edit —
-    * that is the point. */
+    * set forever: apples-to-apples regardless of suite growth. Verify
+    * writes it to query_sets.json, which scripts/bench_duck.py reads.
+    * Never edit — that is the point. */
   val frozenR15: Set[String] = Set(
     "a12_freq_infer", "a12_freq_modal", "a13_rollup", "a14_approx_distinct",
     "a14_distinct_exact", "a15_quantiles", "a16_corr", "a17_cube",
@@ -128,24 +128,43 @@ object Bench {
     // SPARK_GRAFT_BENCH_MODE=cold makes the old per-rep-full-count() the
     // headline instead (reps then include re-analysis + re-optimization).
     val coldHeadline = sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("cold")
-    // eager-construction queries (duplicateClusters) return a frame backed
-    // by checkpoint blocks the CALLER owns; without cleanup, 1+reps runs
-    // accumulate persisted label RDDs reclaimed only by GC (advisor
-    // finding). The body runs INSIDE the caller's timing window, so only
-    // TRACK the new persistent RDDs here — the caller unpersists them via
-    // the returned thunk AFTER capturing the time (advisor round-4: the
-    // old in-scope unpersist ran inside both nanoTime windows).
-    def trackingRdds[A](name: String)(body: => A): (A, () => Unit) =
-      if (!SparkEntry.eagerConstruction(name)) (body, () => ())
+    // failures are recorded as `Class: message` (first line) per posture
+    // and kept out of every total; a query's value is the median of its
+    // successful reps, -1.0 only when every rep failed
+    def medianOf(ts: Seq[Double]): Double =
+      if (ts.isEmpty) -1.0
       else {
-        val sc = spark.sparkContext
-        val before = sc.getPersistentRDDs.keySet
-        val r = body
-        val fresh = sc.getPersistentRDDs.collect {
-          case (id, rdd) if !before(id) => rdd
-        }.toSeq
-        (r, () => fresh.foreach(_.unpersist(blocking = false)))
+        val s = ts.sorted
+        val n = s.size
+        // true median: average the middle two when the count is even
+        if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
       }
+    // one rep: its time, or the failure's reason. A query built per call
+    // (one the registry does not memoize, e.g. duplicateClusters' labels)
+    // returns a frame backed by checkpoint blocks the CALLER owns; without
+    // cleanup, 1+reps runs accumulate persisted label RDDs reclaimed only
+    // by GC. So every rep releases the persistent RDDs it created, AFTER
+    // capturing the time: the release must stay outside the timed window.
+    def timed(what: String)(body: => Any): Either[String, Double] = {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val t0 = System.nanoTime()
+      try {
+        body
+        val t = (System.nanoTime() - t0) / 1e9
+        sc.getPersistentRDDs.foreach { case (id, rdd) =>
+          if (!before(id)) rdd.unpersist(blocking = false)
+        }
+        Right(t)
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $what failed: ${e.getMessage}")
+          val msg = String.valueOf(e.getMessage).linesIterator.nextOption()
+          Left(s"${e.getClass.getName}: ${msg.getOrElse("")}")
+      }
+    }
+    val failedWarm, failedCold, failedAqe =
+      scala.collection.mutable.LinkedHashMap.empty[String, String]
     // end-of-run stall guard (round-19 verdict ask 6): sweep any persistent
     // blocks a query leaked (lazy localCheckpoints materialized by a cold
     // run of a non-eager query, a training persist whose paired unpersist
@@ -160,25 +179,17 @@ object Bench {
       // attribute this query's capped-operator drops in the round table
       graft.ext.DropMetrics.setContext(name)
       val rddsAtQueryStart = spark.sparkContext.getPersistentRDDs.keySet
-      val tCold0 = System.nanoTime()
-      var coldReclaim: () => Unit = () => ()
-      val coldOk = try {
-        val (_, rec) = trackingRdds(name) { fn(spark, sfDir).count() }
-        coldReclaim = rec
-        true
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name failed cold: ${e.getMessage}")
-          false
-      }
-      val cold = if (coldOk) (System.nanoTime() - tCold0) / 1e9 else -1.0
-      coldReclaim() // outside the timed window
+      val coldRun = timed(s"$name cold")(fn(spark, sfDir).count())
+      coldRun.left.foreach(failedCold(name) = _)
+      val cold = coldRun.getOrElse(-1.0)
+      val coldOk = coldRun.isRight
       // the once-planned count plan the warm reps clone-and-execute (count
       // mirrors the old methodology: EliminateSorts drops final orderBys
-      // in both postures, so cold and warm stay comparable). Queries whose
-      // construction performs eager distributed work (iterative label
-      // propagation) are exempt — their reps call the query fn itself, so
-      // every repetition re-pays the iteration like the DuckDB oracle does.
+      // in both postures, so cold and warm stay comparable). Queries the
+      // registry did not memoize (their construction ran SQL — training,
+      // iterative label propagation — or their plan reads materialized
+      // RDD state) are exempt — their reps call the query fn itself, so
+      // every repetition re-pays that work like the DuckDB oracle does.
       // clone-based warm reps are AQE-OFF only: an AdaptiveSparkPlan's
       // clone keeps references to its already-MATERIALIZED query stages,
       // so cloned reps would reuse map outputs and skip every exchange —
@@ -192,7 +203,7 @@ object Bench {
       // speedups under AQE (advisor round-4)
       val aqeOn = spark.conf.get("spark.sql.adaptive.enabled").toBoolean
       val planned = if (coldOk && !coldHeadline && !aqeOn &&
-          !SparkEntry.eagerConstruction(name)) {
+          SparkEntry.memoized(spark, name, sfDir)) {
         try Some(fn(spark, sfDir).groupBy().count().queryExecution.executedPlan)
         catch { case _: Throwable => None }
       } else None
@@ -203,34 +214,13 @@ object Bench {
       System.gc()
       val rt = Runtime.getRuntime
       heapMb(name) = (rt.totalMemory - rt.freeMemory) >> 20
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        var reclaim: () => Unit = () => ()
-        val ok = try {
-          planned match {
-            case Some(p) => p.clone().execute().count()
-            case None =>
-              val (_, rec) = trackingRdds(name) { fn(spark, sfDir).count() }
-              reclaim = rec
-          }
-          true
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-        }
-        // failures are reported as -1, never as a plausible timing
-        val t = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        reclaim() // outside the timed window
-        t
+      def warmRun(): Long = planned match {
+        case Some(p) => p.clone().execute().count()
+        case None => fn(spark, sfDir).count()
       }
-      val median =
-        if (times.contains(-1.0)) -1.0
-        else {
-          val s = times.sorted
-          // true median: average the middle two when reps is even
-          if (reps % 2 == 1) s(reps / 2) else (s(reps / 2 - 1) + s(reps / 2)) / 2.0
-        }
+      val runs = (1 to reps).map(_ => timed(name)(warmRun()))
+      runs.collectFirst { case Left(r) => r }.foreach(failedWarm(name) = _)
+      val median = medianOf(runs.collect { case Right(t) => t })
       // job/stage audit (one extra untimed execution of the warm body):
       // a sub-0.2 s query paying 4-23× vs DuckDB is paying Spark's per-JOB
       // floor — this count is the denominator of that tail, so regressions
@@ -238,14 +228,7 @@ object Bench {
       // surface as a number, not a vibe
       val tracker = spark.sparkContext.statusTracker
       val jobsBefore = tracker.getJobIdsForGroup(null).toSet
-      try {
-        planned match {
-          case Some(p) => p.clone().execute().count()
-          case None =>
-            val (_, rec) = trackingRdds(name) { fn(spark, sfDir).count() }
-            rec()
-        }
-      } catch { case _: Throwable => () }
+      try warmRun() catch { case _: Throwable => () }
       val jobIds = tracker.getJobIdsForGroup(null).toSet -- jobsBefore
       val nStages = jobIds.toSeq
         .flatMap(id => tracker.getJobInfo(id).map(_.stageIds.length)).sum
@@ -268,8 +251,8 @@ object Bench {
     // lens). Clone-per-rep like the warm path, so it is AQE-off only.
     val floorThresh = 0.25
     val subfloor = results.collect {
-      case (n, (w, _, _, _)) if w >= 0 && w < floorThresh &&
-        !SparkEntry.eagerConstruction(n) => n
+      case (n, (w, _, _, _)) if !failedWarm.contains(n) && w < floorThresh &&
+        SparkEntry.memoized(spark, n, sfDir) => n
     }.toSeq.sorted
     val batched: Option[Double] =
       if (subfloor.size < 2 || aqeMain) None
@@ -286,9 +269,8 @@ object Bench {
           val t0 = System.nanoTime()
           planned.clone().execute().count()
           (System.nanoTime() - t0) / 1e9
-        }.sorted
-        Some(if (reps % 2 == 1) ts(reps / 2)
-          else (ts(reps / 2 - 1) + ts(reps / 2)) / 2.0)
+        }
+        Some(medianOf(ts))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] batched posture failed: ${e.getMessage}")
         None
@@ -318,37 +300,18 @@ object Bench {
         selected.map { case (name, fn) =>
           graft.ext.DropMetrics.setContext(name)
           val rddsAt = spark.sparkContext.getPersistentRDDs.keySet
-          val ts = (1 to aqeReps).map { _ =>
-            val t0 = System.nanoTime()
-            var reclaim: () => Unit = () => ()
-            val ok = try {
-              val (_, rec) = trackingRdds(name) { fn(spark, sfDir).count() }
-              reclaim = rec
-              true
-            } catch {
-              case e: Throwable =>
-                System.err.println(s"[bench] $name failed under AQE: ${e.getMessage}")
-                false
-            }
-            val t = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-            reclaim()
-            t
+          val runs = (1 to aqeReps).map { _ =>
+            timed(s"$name under AQE")(fn(spark, sfDir).count())
           }
           spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
             if (!rddsAt(id)) rdd.unpersist(blocking = false)
           }
-          val med =
-            if (ts.contains(-1.0)) -1.0
-            else {
-              val s = ts.sorted
-              if (aqeReps % 2 == 1) s(aqeReps / 2)
-              else (s(aqeReps / 2 - 1) + s(aqeReps / 2)) / 2.0
-            }
-          name -> med
+          runs.collectFirst { case Left(r) => r }.foreach(failedAqe(name) = _)
+          name -> medianOf(runs.collect { case Right(t) => t })
         }.toMap
       } finally {
         // unconditional restore: a throw outside the per-query catch
-        // (trackingRdds setup, reclaim) must not leave AQE flipped on for
+        // (the per-rep RDD release) must not leave AQE flipped on for
         // later harness work in this session
         spark.conf.set("spark.sql.adaptive.enabled", "false")
       }
@@ -359,8 +322,18 @@ object Bench {
     val qsJobs = results
       .map { case (k, (_, _, j, st)) => s"\"$k\":[$j,$st]" }
       .mkString("{", ",", "}")
-    val total = results.values.map(_._1).sum
-    val totalCold = results.values.map(_._2).sum
+    // a query with any failed rep in a posture stays out of that
+    // posture's totals (its row and reason still print)
+    val warmOk = results.collect {
+      case (n, (w, _, _, _)) if !failedWarm.contains(n) => n -> w
+    }
+    val total = warmOk.values.sum
+    val totalCold = results.collect {
+      case (n, (_, c, _, _)) if !failedCold.contains(n) => c
+    }.sum
+    val totalAqe = aqeQueries.collect {
+      case (n, t) if !failedAqe.contains(n) => t
+    }.sum
     // the honest headline (judge ask, round 16): the aggregate WITHOUT
     // the rows whose DuckDB oracle is a declared-naive kernel replay
     // (SparkEntry.naiveOracleReplay) — those rows flatter any
@@ -368,8 +341,8 @@ object Bench {
     // not a real query. bench_duck.py prints the same decomposition.
     val naiveExcluded =
       results.keySet.intersect(SparkEntry.naiveOracleReplay).toSeq.sorted
-    val totalHonest = results.collect {
-      case (n, (w, _, _, _)) if !SparkEntry.naiveOracleReplay(n) => w
+    val totalHonest = warmOk.collect {
+      case (n, w) if !SparkEntry.naiveOracleReplay(n) => w
     }.sum
     // fixed-denominator trend figures (judge ask, round 17): totals over
     // the FROZEN r15 membership so round-over-round movement is
@@ -379,11 +352,11 @@ object Bench {
     // bench_duck.py's twin (DuckDB can only time rows it has SQL for).
     val frozenComparable = frozenR15.intersect(SparkEntry.oracleSql.keySet)
     val frozenMissing = frozenComparable.diff(results.keySet).toSeq.sorted
-    val totalFrozen = results.collect {
-      case (n, (w, _, _, _)) if frozenComparable(n) => w
+    val totalFrozen = warmOk.collect {
+      case (n, w) if frozenComparable(n) => w
     }.sum
-    val totalFrozenHonest = results.collect {
-      case (n, (w, _, _, _))
+    val totalFrozenHonest = warmOk.collect {
+      case (n, w)
         if frozenComparable(n) && !SparkEntry.naiveOracleReplay(n) => w
     }.sum
     // suite total when the sub-floor probes share jobs: the batched
@@ -391,9 +364,7 @@ object Bench {
     // medians (each of which pays the per-job floor separately) — what a
     // real client batching its small probes into one action would pay.
     val totalBatched = batched.map { s =>
-      s + results.collect {
-        case (n, (w, _, _, _)) if w >= 0 && !subfloor.contains(n) => w
-      }.sum
+      s + warmOk.collect { case (n, w) if !subfloor.contains(n) => w }.sum
     }
     val batchedJson = batched.fold("")(s =>
       s""","batched_subfloor":{"n":${subfloor.size},""" +
@@ -401,7 +372,7 @@ object Bench {
         s""""total_batched":${totalBatched.get}""")
     val aqeJson =
       if (aqeQueries.isEmpty) ""
-      else s""","total_aqe":${aqeQueries.values.sum},""" +
+      else s""","total_aqe":$totalAqe,""" +
         s""""queries_aqe":${jsonMap(aqeQueries)}"""
     // round-level "rows dropped by caps" table (no-silent-caps audit):
     // flush the async listener bus first so every execution's observed
@@ -430,6 +401,11 @@ object Bench {
     // the stall-guard ask; flat ⇒ no block/heap accumulation across the run)
     val heapJson = heapMb.map { case (k, v) => s"\"$k\":$v" }
       .mkString(""","heap_mb":{""", ",", "}")
+    def reasons(m: Iterable[(String, String)]): String = m
+      .map { case (k, r) => s"${Verify.jsonString(k)}:${Verify.jsonString(r)}" }
+      .mkString("{", ",", "}")
+    val failedJson = s""","failed":{"warm":${reasons(failedWarm)},""" +
+      s""""cold":${reasons(failedCold)},"aqe":${reasons(failedAqe)}}"""
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""total_excl_naive_oracle":$totalHonest,""" +
@@ -441,7 +417,7 @@ object Bench {
           naiveExcluded.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""total_cold":$totalCold,"queries_cold":$qsCold,""" +
         s""""queries_jobs":$qsJobs$batchedJson""" +
-        s"""$aqeJson$dropsJson$heapJson,"sf":"$sfDir"}"""
+        s"""$aqeJson$failedJson$dropsJson$heapJson,"sf":"$sfDir"}"""
     println(line)
     // also land the result as a file: the driver's log tail truncates long
     // lines, which made BENCH_r02.json unparseable mid-JSON
@@ -469,7 +445,7 @@ object Bench {
         s""""total_excl_naive_frozen_r15":${c3(totalFrozenHonest)},""" +
         s""""total_cold":${c3(totalCold)}""" +
         aqeQueries.headOption.fold("")(_ =>
-          s""","total_aqe":${c3(aqeQueries.values.sum)}""") +
+          s""","total_aqe":${c3(totalAqe)}""") +
         s""","sf":"$sfDir"}""")
     spark.stop()
   }

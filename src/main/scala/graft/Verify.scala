@@ -4,6 +4,19 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** JSON string literal: escapes backslash, quote, and ALL control chars
+    * (<0x20) — a tab or CR in hand-written oracle SQL would otherwise make
+    * json.load fail on the dump. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -28,18 +41,6 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // SPARK_GRAFT_ONLY=name1,name2 restricts the dump (builder-side
     // targeted drives); the driver sets no env, so its runs stay full
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -79,15 +80,23 @@ object Verify {
         println(s"GOLDEN $name: $status ($hash)")
         if (sys.env.contains("SPARK_GRAFT_GOLDEN_WRITE"))
           println(s"GOLDEN_TRIPLE $sfKey $name $hash")
-        s"""${q(name)}: {"hash": ${q(hash)}, "expected": ${
-          exp.fold("null")(q)}, "status": ${q(status)}}"""
+        s"""${jsonString(name)}: {"hash": ${jsonString(hash)}, "expected": ${
+          exp.fold("null")(jsonString)}, "status": ${jsonString(status)}}"""
       }
     }
     Files.writeString(Paths.get(s"$outDir/golden_check.json"),
       goldenRows.mkString("{", ",", "}"))
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // the bench membership sets scripts/bench_duck.py reads (one copy,
+    // owned here in Scala)
+    def names(ns: Set[String]): String =
+      ns.toSeq.sorted.map(jsonString).mkString("[", ",", "]")
+    Files.writeString(Paths.get(s"$outDir/query_sets.json"),
+      s"""{"frozen_r15": ${names(Bench.frozenR15)}, """ +
+        s""""naive_oracle_replay": ${names(SparkEntry.naiveOracleReplay)}}""")
     // round-level "rows dropped by caps" table (no-silent-caps audit) —
     // flush the async listener bus BEFORE clearing the context so every
     // execution's metrics land attributed

@@ -36,5 +36,8 @@ final class PlanMemo[K](maxEntries: Int = 256) {
     }
   }
 
+  def get(spark: SparkSession, k: K): Option[DataFrame] =
+    Option(m.synchronized(m.get((sessionKey(spark), k))))
+
   def clear(): Unit = m.synchronized(m.clear())
 }

@@ -36,7 +36,8 @@ object GraftColumnBridge {
 
   /** Drain the listener bus (`listenerBus` is `private[spark]`): harness
     * mains flush it before reading [[graft.ext.DropMetrics]]' async
-    * per-query totals, so the printed drop table covers every execution. */
+    * per-query totals, Profile fences its listener attach/detach with it,
+    * and [[graft.internal.SqlExecutionProbe]] reads its counts after it. */
   def flushListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 

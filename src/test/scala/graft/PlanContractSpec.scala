@@ -1,11 +1,14 @@
 package graft
 
+import scala.util.Try
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan contracts: the scale-critical properties PLANS.md claims, asserted
   * over EVERY declared query's physical plan so a refactor cannot silently
-  * regress them. Construction-only (plans are built at sf0.001, nothing
-  * executes except the eager-construction queries' training jobs).
+  * regress them. Plans are built at sf0.001; nothing executes except the
+  * training jobs some queries run at construction and the memo
+  * fault-injection test, which runs every memoized query twice.
   */
 class PlanContractSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -437,6 +440,58 @@ class PlanContractSpec extends AnyFunSuite {
       assert(shuffles(p) == 1,
         s"$name grew a corpus exchange (expected ordering only):\n$p")
     }
+  }
+
+  test("memoization is derived per build: a table's first load does not " +
+      "cost a query its memo") {
+    // a fresh session keys fresh memo slots, and a cleared table cache
+    // makes this build run the uncached parquet reads (schema-inference
+    // jobs, no SQL execution) — the memo must not depend on call order
+    val fresh = spark.newSession()
+    sources.Tables.clearCache()
+    assert(!SparkEntry.memoized(fresh, "q1_agg", dir))
+    val built = SparkEntry.queries("q1_agg")(fresh, dir)
+    assert(SparkEntry.memoized(fresh, "q1_agg", dir),
+      "q1_agg's first build after Tables.clearCache() was not memoized")
+    assert(SparkEntry.queries("q1_agg")(fresh, dir) eq built)
+  }
+
+  test("queries that run SQL at construction or plan over RDD leaves are " +
+      "never memoized") {
+    // lazy-localCheckpoint RDD leaves (the n-gram posting counts),
+    // iterative label propagation, Lloyd training, the domain-gate
+    // checkpoint — built twice, memoized neither time
+    Seq("dedup_ngram_jaccard", "dedup_containment", "dedup_clusters",
+        "sim_ivf_topk", "url_domain_gate").foreach { name =>
+      (1 to 2).foreach { i =>
+        SparkEntry.queries(name)(spark, dir)
+        assert(!SparkEntry.memoized(spark, name, dir),
+          s"$name was memoized after build $i")
+      }
+    }
+  }
+
+  test("every memoized query gives the same answer after all persistent " +
+      "RDDs are released") {
+    // fault injection: a memoized plan must not depend on block-manager
+    // state — release every persistent RDD between two runs (what a
+    // harness leak sweep or a lost executor does) and compare answers
+    val memoized = plans.keys.toSeq.sorted
+      .filter(SparkEntry.memoized(spark, _, dir))
+    assert(memoized.size > 100, s"only ${memoized.size} queries memoized")
+    def show(h: Try[String]): String = h.fold(
+      e => s"${e.getClass.getName}: ${e.getMessage}".take(300), identity)
+    val broken = memoized.flatMap { name =>
+      def hash() =
+        Try(GoldenHashes.contentHash(SparkEntry.queries(name)(spark, dir)))
+      val before = hash()
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
+      val after = hash()
+      if (before.isSuccess && after == before) None
+      else Some(s"$name: ${show(before)} -> ${show(after)}")
+    }
+    assert(broken.isEmpty, broken.mkString("\n", "\n", ""))
   }
 
   test("scans prune columns: q1 reads only the aggregated lineitem columns") {
