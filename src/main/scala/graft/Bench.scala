@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** FROZEN round-15 bench membership (the 158 queries BENCH_r15
@@ -56,59 +55,21 @@ object Bench {
     "w2_seq_stats", "w3_slice", "w4_xy", "w5_split", "w6_weekend",
     "w7_horizon", "w8_session", "w9_ranks")
 
+  /** Times every [[Harness.selected]] query over `SPARK_GRAFT_SF_DIR`
+    * (default sf0.1) in the [[Harness.session]] posture — cold, warm
+    * (median of `SPARK_GRAFT_BENCH_REPS`), a batched sub-floor posture
+    * and, unless `SPARK_GRAFT_AQE_BLOCK=false`, an AQE-on block — and
+    * prints the full JSON line (also written to `SPARK_GRAFT_BENCH_OUT`,
+    * default BENCH_LOCAL.json) followed by a compact totals line. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE OFF for the local microbenchmark: its value — runtime re-plans
-      // under stats uncertainty, partition coalescing, skew splitting — is
-      // a cluster-scale property, while locally every adaptive stage is a
-      // separate job whose materialization barrier (~15-40 ms) dominates
-      // sub-second queries. Plans are AQE-safe either way (broadcast and
-      // shuffle_hash hints are explicit where misestimates bite; see
-      // ext/Dedup.scala); at-scale sessions should run AQE on, and
-      // SPARK_GRAFT_AQE=true measures that posture here.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      // 4 shuffle partitions: at sf0.1 every post-shuffle partition is
-      // well under a MB, so task-scheduling overhead dominates — measured
-      // full-set totals: 32→14.7s, 8→13.0s, 4→11.5s, 2→11.6s (s2 wins tiny
-      // queries but loses the heavies to lost parallelism; 4 is the knee)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "4"))
-      // 78 queries × ~5 codegen fragments overflow the default 100-entry
-      // compile cache across the run (static conf, must be set pre-session)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // big driver heaps GC so rarely that the ContextCleaner cannot
-      // reclaim dead shuffle metadata (it acts on RDD-object collection);
-      // force the cleaner's periodic GC often enough for a multi-minute
-      // harness run — see ROUND_NOTES "long-session JVM killers"
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = Harness.selected()
+    val selected = SparkEntry.queries.filter { case (n, _) => only(n) }
+    val spark = Harness.session()
     // steady-state timing: one untimed warmup run (JIT, codegen cache,
     // parquet footers), then the median of 3 timed runs — single runs at
     // this scale are dominated by scheduler jitter (±30% observed)
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    // focused A/B runs: SPARK_GRAFT_BENCH_ONLY=q1,q2 benches a subset;
-    // the sentinel "@frozen_r15" expands to the frozen round-15
-    // membership (∩ oracle-checked rows — the denominator both engines
-    // quote), the sf1.0 sandwich posture (round-19 verdict ask 1)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map {
-        case "@frozen_r15" => frozenR15.intersect(SparkEntry.oracleSql.keySet)
-        case s => s.split(",").map(_.trim).toSet
-      }
-    only.foreach(_.diff(SparkEntry.queries.keySet).foreach(n =>
-      System.err.println(s"[bench] WARNING: unknown query '$n' in " +
-        "SPARK_GRAFT_BENCH_ONLY (typo would silently bench nothing)")))
-    val selected = only.fold(SparkEntry.queries)(s =>
-      SparkEntry.queries.filter { case (n, _) => s.contains(n) })
     // Two postures, BOTH reported (advisor ask: make the amortization
     // explicit so the judge can grade either):
     //  * cold — the first, fully un-amortized call: DataFrame construction
@@ -125,9 +86,6 @@ object Bench {
     //    honesty checks: warm dedup heavies ~0.4 s vs 0.01 s with stage
     //    reuse, and clone-vs-fresh-QueryExecution differs only by the
     //    re-planning cost (30-200 ms/query) with identical stage sets.
-    // SPARK_GRAFT_BENCH_MODE=cold makes the old per-rep-full-count() the
-    // headline instead (reps then include re-analysis + re-optimization).
-    val coldHeadline = sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("cold")
     // failures are recorded as `Class: message` (first line) per posture
     // and kept out of every total; a query's value is the median of its
     // successful reps, -1.0 only when every rep failed
@@ -202,7 +160,7 @@ object Bench {
       // the clone-based warm path whose materialized-stage reuse fakes
       // speedups under AQE (advisor round-4)
       val aqeOn = spark.conf.get("spark.sql.adaptive.enabled").toBoolean
-      val planned = if (coldOk && !coldHeadline && !aqeOn &&
+      val planned = if (coldOk && !aqeOn &&
           SparkEntry.memoized(spark, name, sfDir)) {
         try Some(fn(spark, sfDir).groupBy().count().queryExecution.executedPlan)
         catch { case _: Throwable => None }

@@ -1,26 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection helper: `runMain graft.Explain <query> [sfDir] [mode]`
   * prints the formatted physical plan and the timed execution of one
-  * SparkEntry query. */
+  * SparkEntry query in the [[Harness.session]] posture. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val mode = if (args.length > 2) args(2) else "formatted"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.explain(mode)
     // warmup + timed, mirroring Bench

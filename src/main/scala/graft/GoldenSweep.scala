@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** 3-SF golden-gate sweep: evaluates every [[GoldenHashes.queries]]
   * entry at each given sf dir and prints one `GOLDEN <sf> <query>
   * pass|FAIL|no_golden (<hash>)` line plus the commit-ready
   * `GOLDEN_TRIPLE` lines — the one-command evidence run for the pinned
   * set (`scripts/run_main.sh graft.GoldenSweep [sfDir...]`, default all
-  * three test SFs). Exits non-zero on any FAIL. Queries filter:
-  * `SPARK_GRAFT_GOLDEN_ONLY=q1,q2`. */
+  * three test SFs) in the [[Harness.session]] posture. Exits non-zero on
+  * any FAIL. Queries filter: [[Harness.selected]]. */
 object GoldenSweep {
 
   /** Repo root resolved from a KNOWN anchor — the compiled classes'
@@ -79,23 +77,13 @@ object GoldenSweep {
     val sfDirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")
-    val only = sys.env.get("SPARK_GRAFT_GOLDEN_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = Harness.selected()
+    val spark = Harness.session()
     var failures = 0
     sfDirs.foreach { sfDir =>
       val sfKey = java.nio.file.Paths.get(sfDir).getFileName.toString
       GoldenHashes.queries
-        .filter(n => only.forall(_.contains(n)))
+        .filter(only)
         .foreach { name =>
           SparkEntry.queries.get(name).foreach { fn =>
             val (hash, exp, ok) =

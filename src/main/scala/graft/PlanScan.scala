@@ -1,27 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-shape census over every registered query: prints one line per
   * query with the physical-plan node classes that the round's plan
   * contracts care about (Window, join strategies, exchange count) —
   * the quick audit the optimization rounds run after touching a shared
   * operator to see every affected query at once, instead of
-  * re-discovering them one failing contract at a time.
+  * re-discovering them one failing contract at a time. Plans are those
+  * of the [[Harness.session]] posture.
   *
   * Usage: `scripts/run_main.sh graft.PlanScan [sfDir]`
   */
 object PlanScan {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val p = fn(spark, dir).queryExecution.executedPlan.toString

@@ -3,22 +3,21 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Stage-waterfall profiler for single queries — the measurement arm of
   * the perf protocol (name the barrier BEFORE touching the code).
   *
-  * Mirrors Bench's warm posture exactly (AQE off unless SPARK_GRAFT_AQE,
-  * 4 CPUs / 4 shuffle partitions by default, once-planned
-  * `groupBy().count()` plan, clone-and-execute), runs one
-  * untimed warmup then one instrumented execution, and prints per-job /
-  * per-stage wall times, task counts, and shuffle/input byte counters.
+  * Mirrors Bench's warm posture exactly (the [[Harness.session]]
+  * posture, once-planned `groupBy().count()` plan, clone-and-execute),
+  * runs one untimed warmup then one instrumented execution, and prints
+  * per-job / per-stage wall times, task counts, and shuffle/input byte
+  * counters.
   * Jobs are printed in submission order with their wall offsets so
   * sequential barriers (job N+1 starts only after job N ends) are
   * visible as non-overlapping spans.
   *
   * Usage: `scripts/run_main.sh graft.Profile <query> [query...]`
-  * (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE).
+  * (env: SPARK_GRAFT_SF_DIR plus the [[Harness]] posture's).
   */
 object Profile {
   private final class Waterfall extends SparkListener {
@@ -84,20 +83,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Profile <query> [query...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "4"))
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     args.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

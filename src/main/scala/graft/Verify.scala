@@ -1,8 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each [[Harness.selected]] query's result → parquet,
+  * plus oracle_sql.json, for the DuckDB compare (scripts/check_oracle.py),
+  * in the [[Harness.session]] posture (`SPARK_GRAFT_AQE=true` is the AQE-on
+  * robustness sweep: every query's VALUES must survive adaptive
+  * re-planning). Usage: `Verify <sfDir> <outDir>`. Exits 2 when a query
+  * threw, 3 on a golden mismatch. */
 object Verify {
   /** JSON string literal: escapes backslash, quote, and ALL control chars
     * (<0x20) — a tab or CR in hand-written oracle SQL would otherwise make
@@ -19,41 +22,24 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // pandas-like permissive semantics to mirror the reference (and the
-      // DuckDB oracle's long-wraparound / implicit-cast behavior)
-      .config("spark.sql.ansi.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS); surface as long, converted
-      // back to µs timestamps in sources.Tables.load
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // default off (deterministic plans for the hash compare); the
-      // AQE-on robustness sweep (SPARK_GRAFT_AQE=true) proves every
-      // query's VALUES survive adaptive re-planning — runtime join-
-      // strategy swaps, partition coalescing, skew splits
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Harness.selected()
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=name1,name2 restricts the dump (builder-side
-    // targeted drives); the driver sets no env, so its runs stay full
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(name: String): Boolean = only.forall(_.contains(name))
+    // a query that throws is recorded and the run goes on, so every other
+    // output still lands; the run then exits non-zero naming them
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def attempt[T](name: String)(body: => T): Option[T] =
+      try Some(body)
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
+        None
+      }
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name)) {
         graft.ext.DropMetrics.setContext(name)
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+        attempt(name)(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
         // flush PER QUERY, not only at drain time: execution-end events
         // are async, so a capped operator's drop metric could otherwise
         // land in the NEXT query's context (observed at sf1.0:
@@ -70,10 +56,13 @@ object Verify {
     // into resources/graft/golden_hashes.txt after an intended change.
     val sfKey = Paths.get(sfDir).getFileName.toString
     var goldenFailures = 0
-    val goldenRows = GoldenHashes.queries.filter(selected).flatMap { name =>
-      SparkEntry.queries.get(name).map { fn =>
+    // a query whose dump threw is not rebuilt here: it already failed the run
+    val goldenNames = GoldenHashes.queries.filter(n => selected(n) && !failed(n))
+    val goldenRows = goldenNames.flatMap { name =>
+      SparkEntry.queries.get(name).flatMap { fn =>
         graft.ext.DropMetrics.setContext(name)
-        val (hash, exp, ok) = GoldenHashes.check(name, sfKey, fn(spark, sfDir))
+        attempt(name)(GoldenHashes.check(name, sfKey, fn(spark, sfDir)))
+      }.map { case (hash, exp, ok) =>
         val status =
           if (exp.isEmpty) "no_golden" else if (ok) "pass" else "FAIL"
         if (status == "FAIL") goldenFailures += 1
@@ -110,13 +99,18 @@ object Verify {
       println("DROPS none (no capped-operator drops observed this run)")
     else dropTable.foreach { case (name, n) => println(s"DROPS $name: $n") }
     spark.stop()
-    // a golden mismatch is a VALUE regression in a production hash path —
-    // fail the artifact (rc != 0), not just the log, so the driver's gate
-    // catches it even when the ScalaTest suite is skipped. no_golden rows
-    // (new SF, pre-pin) stay soft.
-    if (goldenFailures > 0) {
+    // a query that threw has no value to compare: exit 2, ahead of the
+    // golden check. A golden mismatch is a VALUE regression in a
+    // production hash path: exit 3. Both fail the run, not just the log,
+    // so a caller that checks the exit code catches them even when the
+    // ScalaTest suite is skipped. no_golden rows (new SF, pre-pin) stay
+    // soft.
+    if (failed.nonEmpty)
+      System.err.println(s"[verify] ${failed.size} query failure(s): " +
+        failed.mkString(", "))
+    if (goldenFailures > 0)
       System.err.println(s"[verify] $goldenFailures golden FAILure(s)")
-      sys.exit(3)
-    }
+    if (failed.nonEmpty) sys.exit(2)
+    if (goldenFailures > 0) sys.exit(3)
   }
 }

@@ -119,68 +119,6 @@ object TimeSeriesOps {
       .filter(size(col(outCol)) === seqLen)
   }
 
-  /** W1 scale path: same output as [[slidingWindows]], but with ONE shuffle
-    * (groupBy entity) instead of a window-function sort, and the slicing
-    * done by array `transform` over the collected per-entity series.
-    *
-    * Tradeoff: holds one entity's full series in memory per row (window
-    * form holds L rows per frame slot). Prefer this when entities are
-    * bounded (sensor/user series) and L is large; prefer [[slidingWindows]]
-    * when single entities can be arbitrarily long. Both are declarative —
-    * Catalyst plans map-side partial aggregation for the collect.
-    */
-  def slidingWindowsCompact(
-      df: DataFrame,
-      idCol: String,
-      orderCol: String,
-      valueCols: Seq[String],
-      seqLen: Int,
-      outCol: String = "window"): DataFrame = {
-    val series = df
-      .groupBy(col(idCol))
-      .agg(sort_array(
-        collect_list(struct((orderCol +: valueCols).map(col): _*))).as("__series"))
-    val values = expr(
-      s"transform(__series, s -> struct(${valueCols.map(c => s"s.$c AS $c").mkString(", ")}))")
-    series
-      .withColumn("__vals", values)
-      .select(
-        col(idCol),
-        posexplode(expr(
-          s"transform(sequence(0, greatest(size(__vals) - $seqLen, 0)), " +
-            s"i -> slice(__vals, i + 1, $seqLen))"))
-          .as(Seq("__pos", outCol)))
-      .filter(size(col(outCol)) === seqLen)
-  }
-
-  /** W1 unbounded-entity scale path: every row is exploded into the ≤L
-    * window-start keys it participates in, then one hash aggregation
-    * rebuilds each window. Shuffle volume is L× the input, but per-group
-    * state is exactly L rows — safe even when a single entity's series is
-    * larger than executor memory (where [[slidingWindowsCompact]]'s
-    * per-entity array would OOM and [[slidingWindows]]'s sort-based window
-    * would spill-thrash). Same output contract as both.
-    */
-  def slidingWindowsExplode(
-      df: DataFrame,
-      idCol: String,
-      orderCol: String,
-      valueCols: Seq[String],
-      seqLen: Int,
-      outCol: String = "window"): DataFrame = {
-    val rnW = Window.partitionBy(col(idCol)).orderBy(col(orderCol))
-    df.withColumn("__rn", row_number().over(rnW) - 1)
-      .withColumn("__pos",
-        explode(sequence(greatest(col("__rn") - (seqLen - 1), lit(0)), col("__rn"))))
-      .groupBy(col(idCol), col("__pos"))
-      .agg(sort_array(collect_list(struct((Seq("__rn") ++ valueCols).map(col): _*)))
-        .as("__w"))
-      .filter(size(col("__w")) === seqLen)
-      .withColumn(outCol, expr(
-        s"transform(__w, s -> struct(${valueCols.map(c => s"s.$c AS $c").mkString(", ")}))"))
-      .select(col(idCol), col("__pos"), col(outCol))
-  }
-
   /** W4 — feature/label split of a window: first L−1 steps vs last step
     * (reference: paqarin/metrics/multivariate_metrics.py:29-36).
     */

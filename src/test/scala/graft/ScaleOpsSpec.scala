@@ -11,33 +11,9 @@ class ScaleOpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("slidingWindowsCompact output == slidingWindows output") {
-    val rnd = new scala.util.Random(9)
-    val df = (0 until 4).flatMap(e => (0 until 25).map(t =>
-      (s"e$e", t.toLong, rnd.nextDouble()))).toDF("id", "pos", "v")
-    def flat(got: org.apache.spark.sql.DataFrame) = got
-      .select(col("id"), col("__pos"), expr("transform(window, w -> w.v)").as("w"))
-      .as[(String, Int, Seq[Double])].collect().toSeq.sortBy(r => (r._1, r._2))
-    val a = flat(TimeSeriesOps.slidingWindows(df, "id", "pos", Seq("v"), 7))
-    val b = flat(TimeSeriesOps.slidingWindowsCompact(df, "id", "pos", Seq("v"), 7))
-    assert(a == b && a.size == 4 * (25 - 7 + 1))
-  }
-
-  test("slidingWindowsExplode output == slidingWindows output") {
-    val rnd = new scala.util.Random(19)
-    val df = (0 until 3).flatMap(e => (0 until 20).map(t =>
-      (s"e$e", t.toLong, rnd.nextDouble()))).toDF("id", "pos", "v")
-    def flat(got: org.apache.spark.sql.DataFrame) = got
-      .select(col("id"), col("__pos"), expr("transform(window, w -> w.v)").as("w"))
-      .as[(String, Int, Seq[Double])].collect().toSeq.sortBy(r => (r._1, r._2))
-    val a = flat(TimeSeriesOps.slidingWindows(df, "id", "pos", Seq("v"), 5))
-    val b = flat(TimeSeriesOps.slidingWindowsExplode(df, "id", "pos", Seq("v"), 5))
-    assert(a == b && a.size == 3 * 16)
-  }
-
-  test("slidingWindowsCompact: entities shorter than L emit nothing") {
+  test("slidingWindows: entities shorter than L emit nothing") {
     val df = Seq(("a", 0L, 1.0), ("a", 1L, 2.0)).toDF("id", "pos", "v")
-    assert(TimeSeriesOps.slidingWindowsCompact(df, "id", "pos", Seq("v"), 3).count() == 0)
+    assert(TimeSeriesOps.slidingWindows(df, "id", "pos", Seq("v"), 3).count() == 0)
   }
 
   test("globalPosition equals the single-partition row_number numbering") {
