@@ -643,9 +643,9 @@ def decode_jpeg(b):
 
 
 # ——— PNG (twin of graft.ext.Png.decode) ———
-# python's zlib does the DEFLATE half — an INDEPENDENT implementation
-# from the JVM's from-scratch Inflate, so agreement here cross-checks
-# the inflater itself, not just the filter math.
+# python's zlib does the DEFLATE half, as the JDK's zlib does on the
+# JVM side; agreement here cross-checks the chunk walk, the filter math
+# and the color expansion.
 
 def decode_png(b):
     import zlib

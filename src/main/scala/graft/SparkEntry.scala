@@ -3086,12 +3086,12 @@ object SparkEntry {
     * becomes a two-record archive (warcinfo + an HTTP response whose
     * entity body is a closed-form byte run), ENCODED then re-parsed
     * in-task — even ids through the seekable one-gzip-member-per-record
-    * `.warc.gz` form ([[graft.ext.Inflate.gunzip]] member walk), odd
-    * ids plain. The oracle recomputes every surviving field (URI
-    * formula, WARC block length = HTTP preamble 44 bytes + body,
-    * status line) in closed form, so a defect anywhere in record
-    * framing, gzip member walking, header parsing or HTTP splitting
-    * breaks the hash. The distributed binaryFile path is spec-tested
+    * `.warc.gz` form ([[graft.ext.Inflate.gunzip]] member walk over
+    * JDK-inflated bodies), odd ids plain. The oracle recomputes every
+    * surviving field (URI formula, WARC block length = HTTP preamble
+    * 44 bytes + body, status line) in closed form, so a defect anywhere
+    * in record framing, gzip member walking, header parsing or HTTP
+    * splitting breaks the hash. The distributed binaryFile path is spec-tested
     * (SourcesSpec) — this row pins the parse arithmetic. */
   private def warcIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -3172,17 +3172,17 @@ object SparkEntry {
       .orderBy(col("doc_id"), col("target_uri"))
   }
 
-  /** REAL lossless entropy-coded decode ([[Png.decode]] over the
-    * from-scratch [[graft.ext.Inflate]] DEFLATE decoder, behind
+  /** REAL lossless entropy-coded decode ([[Png.decode]] over the JDK
+    * zlib reader [[graft.ext.Inflate.zlibInflate]], behind
     * [[Multimodal.decodeReal]]): each sampled doc becomes an 8-bit
     * truecolor PNG (even ids Sub-filtered, odd ids unfiltered) that is
     * ENCODED then chunk-walked, CRC-checked, inflated and defiltered
     * in-task. PNG is lossless, so the decoded pixels equal the synth
     * formula EXACTLY and the DuckDB oracle computes the features in
     * closed form — a full oracle row where the lossy JPEG twin can
-    * only be golden-pinned. Any defect in the chunk walk, the inflater
-    * (stored blocks + Adler-32 here; Huffman paths are covered by the
-    * fixtures and the Deflater differential fuzz), the filter
+    * only be golden-pinned. Any defect in the chunk walk, the
+    * IHDR-bounded inflate (stored blocks + Adler-32 here; Huffman
+    * blocks are covered by the python-zlib fixtures), the filter
     * reconstruction or the RGB expansion breaks the hash. */
   private def mmFeaturesPng(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -6081,8 +6081,8 @@ object SparkEntry {
     // functions the samples were synthesized from (mm_features_real doc)
     // PNG is lossless: decoded pixels == the synth formula, so the
     // oracle computes the decode's features without touching bytes
-    // (mm_features_png doc); the codec arithmetic itself is covered by
-    // the python-zlib worker twin + Deflater differential fuzz
+    // (mm_features_png doc); the defilter arithmetic itself is covered
+    // by the python-zlib worker twin and fixtures
     "mm_features_png" ->
       """WITH md AS (SELECT doc_id, coalesce(n_chars, 0) AS nc
         |  FROM documents WHERE doc_id % 9 = 0),

@@ -2,7 +2,7 @@ package graft.ext
 
 /** GIF codec (GIF87a/89a, from the public specification) — the third
   * entropy-coded image family after [[Jpeg]] (Huffman+DCT) and [[Png]]
-  * (DEFLATE): from-scratch variable-width LZW with the GIF quirks that
+  * (DEFLATE, inflated by the JDK's zlib): from-scratch variable-width LZW with the GIF quirks that
   * break naive implementations — length-prefixed data sub-blocks,
   * LSB-first code packing, clear/end-of-information codes, code width
   * growth in lockstep with the decoder-side dictionary, the 4096-entry
@@ -24,8 +24,8 @@ package graft.ext
   * committed fixture is written by an independent python LZW COMPRESSOR
   * (real adaptive compression, exercising dictionary hits and width
   * growth), while [[encode]] emits the literal-codes-with-periodic-clear
-  * form (valid LZW any decoder accepts — the [[Inflate.zlibDeflateStored]]
-  * of GIF).
+  * form (valid LZW any decoder accepts — what the stored-block
+  * [[Inflate.zlibDeflateStored]] writer is to zlib).
   */
 object Gif {
 

@@ -1,282 +1,68 @@
 package graft.ext
 
-/** From-scratch DEFLATE (RFC 1951) + zlib-wrapper (RFC 1950) decoder —
-  * the decompression half the PNG codec ([[Png]]) sits on. Implemented
-  * from the public RFCs, not ported from any library: LSB-first bit
-  * reader, stored/fixed/dynamic block types, the code-length
-  * meta-alphabet (16/17/18 run codes), canonical Huffman construction
-  * per RFC 1951 §3.2.2, the full length/distance extra-bit tables, and
-  * from-scratch Adler-32 / CRC-32 checksums.
+import java.util.zip.{Adler32, CRC32, CheckedOutputStream, DataFormatException, Inflater}
+
+/** zlib (RFC 1950) and multi-member gzip (RFC 1952) readers over the
+  * JDK's native zlib (`java.util.zip.Inflater`) — the decompression
+  * half the PNG codec ([[Png]]) and the `.warc.gz` source
+  * ([[graft.sources.Warc]]) sit on — plus the STORED-block writers
+  * their encoders and fixtures use.
   *
-  * Correctness posture: DifferentialFuzzSpec round-trips random data
-  * through `java.util.zip.Deflater` at every compression level and
-  * strategy (an INDEPENDENT in-JVM implementation of the same RFC) and
-  * asserts byte-identical inflation; the PNG fixtures are compressed by
-  * python zlib (a second independent implementation). Malformed input
-  * always errors — never a silent wrong decode, never an unbounded
-  * loop (same posture as the other codecs in this package).
+  * Malformed input always errors with an `IllegalArgumentException`,
+  * never a silent short decode or an unbounded loop (same posture as
+  * the other codecs in this package): zlib's `DataFormatException`, a
+  * preset-dictionary request and a stream whose input runs out before
+  * its end are all mapped to one.
   */
 object Inflate {
 
-  /** RFC 1950: 2-byte header (CM=8, window check, no preset dict),
-    * DEFLATE body, big-endian Adler-32 trailer — verified. */
-  def zlibInflate(b: Array[Byte], off: Int, len: Int): Array[Byte] = {
-    require(len >= 6, s"zlib stream too short ($len bytes)")
-    val cmf = b(off) & 0xff
-    val flg = b(off + 1) & 0xff
-    require((cmf & 0x0f) == 8, s"unsupported zlib method ${cmf & 0x0f}")
-    require((cmf * 256 + flg) % 31 == 0, "corrupt zlib header check")
-    require((flg & 0x20) == 0, "preset dictionaries not supported")
-    val (out, consumed) = rawInflate(b, off + 2, len - 6)
-    // Adler-32 trailer immediately follows the deflate stream
-    val tOff = off + 2 + consumed
-    require(tOff + 4 <= off + len, "zlib stream missing Adler-32 trailer")
-    val expected =
-      ((b(tOff) & 0xffL) << 24) | ((b(tOff + 1) & 0xffL) << 16) |
-        ((b(tOff + 2) & 0xffL) << 8) | (b(tOff + 3) & 0xffL)
-    val got = adler32(out)
-    require(got == expected,
-      f"zlib Adler-32 mismatch: got $got%08x, stream says $expected%08x")
-    out
-  }
+  // largest array the JVM hands out, less headroom: past it a decode
+  // errors instead of dying in an OutOfMemoryError
+  private val MaxOut = Int.MaxValue - 16
 
-  /** RFC 1950 §2.2 Adler-32 (from scratch; 5552 = max batch before the
-    * 32-bit sums can overflow, per the RFC's reference notes). */
-  def adler32(data: Array[Byte]): Long = {
-    var a = 1L
-    var s = 0L
-    var i = 0
-    while (i < data.length) {
-      val end = math.min(i + 5552, data.length)
-      while (i < end) { a += (data(i) & 0xff); s += a; i += 1 }
-      a %= 65521L; s %= 65521L
-    }
-    (s << 16) | a
-  }
-
-  private val CrcTable: Array[Long] = Array.tabulate(256) { n =>
-    var c = n.toLong
-    var k = 0
-    while (k < 8) {
-      c = if ((c & 1L) != 0L) 0xedb88320L ^ (c >>> 1) else c >>> 1
-      k += 1
-    }
-    c
-  }
-
-  /** ISO-3309 CRC-32 as PNG uses it (from scratch, reflected form). */
-  def crc32(data: Array[Byte], off: Int, len: Int): Long = {
-    var c = 0xffffffffL
-    var i = off
-    while (i < off + len) {
-      c = CrcTable(((c ^ (data(i) & 0xff)) & 0xff).toInt) ^ (c >>> 8)
-      i += 1
-    }
-    c ^ 0xffffffffL
-  }
-
-  // RFC 1951 §3.2.5 length codes 257-285: (base, extra bits)
-  private val LenBase = Array(3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19,
-    23, 27, 31, 35, 43, 51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258)
-  private val LenExtra = Array(0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2,
-    2, 3, 3, 3, 3, 4, 4, 4, 4, 5, 5, 5, 5, 0)
-  // distance codes 0-29
-  private val DistBase = Array(1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65,
-    97, 129, 193, 257, 385, 513, 769, 1025, 1537, 2049, 3073, 4097, 6145,
-    8193, 12289, 16385, 24577)
-  private val DistExtra = Array(0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5,
-    6, 6, 7, 7, 8, 8, 9, 9, 10, 10, 11, 11, 12, 12, 13, 13)
-  // §3.2.7 code-length alphabet transmission order
-  private val ClOrder = Array(16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12,
-    3, 13, 2, 14, 1, 15)
-
-  /** Canonical Huffman decoder from a code-length array (RFC 1951
-    * §3.2.2): per-length first-code/first-symbol tables; DEFLATE packs
-    * each code most-significant-bit first into the LSB-first stream. */
-  private final class Huff(lengths: Array[Int]) {
-    private val maxLen = if (lengths.isEmpty) 0 else lengths.max
-    require(maxLen <= 15, "corrupt deflate: code length > 15")
-    // count codes per length, then first code per length
-    private val count = new Array[Int](maxLen + 1)
-    lengths.foreach(l => if (l > 0) count(l) += 1)
-    private val firstCode = new Array[Int](maxLen + 2)
-    private val firstSym = new Array[Int](maxLen + 2)
-    private val syms: Array[Int] = {
-      var code = 0
-      var k = 0
-      val offs = new Array[Int](maxLen + 1)
-      for (l <- 1 to maxLen) {
-        firstCode(l) = code
-        firstSym(l) = k
-        offs(l) = k
-        code = (code + count(l)) << 1
-        k += count(l)
+  /** Inflate the stream `inf` was given into `sink`, through `buf`,
+    * until it ends, or until more than `limit` bytes have come out —
+    * then exactly `limit + 1` have been written and the stream's trailer
+    * is not read. Returns the number of bytes written. */
+  private def drain(inf: Inflater, buf: Array[Byte], sink: java.io.OutputStream,
+      limit: Long, what: String): Long = {
+    var n = 0L
+    while (!inf.finished() && n <= limit) {
+      val k =
+        try inf.inflate(buf, 0, math.min(buf.length, limit + 1 - n).toInt)
+        catch {
+          case e: DataFormatException => throw new IllegalArgumentException(
+            if (e.getMessage == "incorrect data check") s"$what Adler-32 mismatch"
+            else s"corrupt $what: ${e.getMessage}", e)
+        }
+      if (k == 0 && !inf.finished()) {
+        require(!inf.needsDictionary(), "preset dictionaries not supported")
+        throw new IllegalArgumentException(s"truncated $what stream")
       }
-      // over-subscribed code sets are corrupt (would decode ambiguously)
-      require((code >> 1) <= (1 << maxLen),
-        "corrupt deflate: over-subscribed Huffman code")
-      val s = new Array[Int](k)
-      var sym = 0
-      while (sym < lengths.length) {
-        val l = lengths(sym)
-        if (l > 0) { s(offs(l)) = sym; offs(l) += 1 }
-        sym += 1
-      }
-      s
+      sink.write(buf, 0, k)
+      n += k
     }
-    def decode(r: BitReader): Int = {
-      var code = 0
-      var l = 1
-      while (l <= maxLen) {
-        code |= r.bit()
-        val n = count(l)
-        if (n > 0 && code - firstCode(l) < n)
-          return syms(firstSym(l) + code - firstCode(l))
-        code = (code - 0) << 1
-        l += 1
-      }
-      throw new IllegalArgumentException(
-        "corrupt deflate: invalid Huffman code")
-    }
+    n
   }
 
-  /** LSB-first bit reader over a byte range. */
-  private final class BitReader(b: Array[Byte], start: Int, end: Int) {
-    var pos: Int = start
-    private var cur = 0
-    private var nbits = 0
-    def bit(): Int = {
-      if (nbits == 0) {
-        require(pos < end, "truncated deflate stream")
-        cur = b(pos) & 0xff
-        pos += 1
-        nbits = 8
-      }
-      val v = cur & 1
-      cur >>= 1
-      nbits -= 1
-      v
-    }
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v |= bit() << i; i += 1 }
-      v
-    }
-    def alignByte(): Unit = { nbits = 0 }
-    /** Bytes consumed so far (after aligning). */
-    def consumed: Int = pos - start
-  }
+  private def u32le(b: Array[Byte], i: Int): Long =
+    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
+      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
 
-  private lazy val FixedLit: Huff = {
-    val l = new Array[Int](288)
-    for (i <- 0 until 144) l(i) = 8
-    for (i <- 144 until 256) l(i) = 9
-    for (i <- 256 until 280) l(i) = 7
-    for (i <- 280 until 288) l(i) = 8
-    new Huff(l)
-  }
-  private lazy val FixedDist: Huff = new Huff(Array.fill(30)(5))
-
-  /** Inflate a raw DEFLATE stream; returns (output, compressed bytes
-    * consumed). Output is grown geometrically; total size is bounded by
-    * the caller's downstream checks (PNG pre-sizes from IHDR and errors
-    * on mismatch). */
-  def rawInflate(b: Array[Byte], off: Int, len: Int): (Array[Byte], Int) = {
-    val r = new BitReader(b, off, off + len)
-    // Long-safe growth with a hard output ceiling: DEFLATE reaches
-    // ~1030:1, so a few-MB bomb legally inflates past 2^31 — the
-    // doubling must neither overflow Int (a *2 wrap at 1 GiB would
-    // spin this loop forever; round-17 review finding) nor allocate
-    // unboundedly. Past the ceiling we ERROR (the "always errors,
-    // never wedges" posture), matching the image decoders' 64 MP caps.
-    val maxOut = Int.MaxValue - 16
-    var out = new Array[Byte](math.max(64, math.min(len.toLong * 4, 1L << 20).toInt))
-    var n = 0
-    def ensure(extra: Int): Unit =
-      if (n.toLong + extra > out.length) {
-        val need = n.toLong + extra
-        require(need <= maxOut,
-          s"inflated output exceeds $maxOut bytes (refusing to expand)")
-        var cap = out.length.toLong * 2
-        while (cap < need) cap *= 2
-        out = java.util.Arrays.copyOf(out, math.min(cap, maxOut.toLong).toInt)
-      }
-    var fin = false
-    while (!fin) {
-      fin = r.bits(1) == 1
-      val btype = r.bits(2)
-      btype match {
-        case 0 => // stored
-          r.alignByte()
-          require(r.pos + 4 <= off + len, "truncated stored block header")
-          val blen = (b(r.pos) & 0xff) | ((b(r.pos + 1) & 0xff) << 8)
-          val nlen = (b(r.pos + 2) & 0xff) | ((b(r.pos + 3) & 0xff) << 8)
-          require((blen ^ 0xffff) == nlen, "corrupt stored block LEN/NLEN")
-          r.pos += 4
-          require(r.pos + blen <= off + len, "truncated stored block data")
-          ensure(blen)
-          System.arraycopy(b, r.pos, out, n, blen)
-          n += blen; r.pos += blen
-        case 1 | 2 =>
-          val (lit, dist) =
-            if (btype == 1) (FixedLit, FixedDist)
-            else {
-              val hlit = r.bits(5) + 257
-              val hdist = r.bits(5) + 1
-              val hclen = r.bits(4) + 4
-              val clLens = new Array[Int](19)
-              var i = 0
-              while (i < hclen) { clLens(ClOrder(i)) = r.bits(3); i += 1 }
-              val cl = new Huff(clLens)
-              val lens = new Array[Int](hlit + hdist)
-              var k = 0
-              while (k < lens.length) {
-                val sym = cl.decode(r)
-                if (sym < 16) { lens(k) = sym; k += 1 }
-                else if (sym == 16) {
-                  require(k > 0, "corrupt deflate: repeat with no prior")
-                  val rep = 3 + r.bits(2)
-                  require(k + rep <= lens.length, "corrupt deflate: repeat overrun")
-                  val prev = lens(k - 1)
-                  var j = 0
-                  while (j < rep) { lens(k) = prev; k += 1; j += 1 }
-                } else {
-                  val rep = if (sym == 17) 3 + r.bits(3) else 11 + r.bits(7)
-                  require(k + rep <= lens.length, "corrupt deflate: zero-run overrun")
-                  k += rep // lens already zero
-                }
-              }
-              require(lens(256) > 0, "corrupt deflate: no end-of-block code")
-              (new Huff(lens.take(hlit)), new Huff(lens.drop(hlit)))
-            }
-          var eob = false
-          while (!eob) {
-            val sym = lit.decode(r)
-            if (sym < 256) {
-              ensure(1)
-              out(n) = sym.toByte
-              n += 1
-            } else if (sym == 256) eob = true
-            else {
-              require(sym <= 285, s"corrupt deflate: length code $sym")
-              val li = sym - 257
-              val length = LenBase(li) + r.bits(LenExtra(li))
-              val dsym = dist.decode(r)
-              require(dsym <= 29, s"corrupt deflate: distance code $dsym")
-              val d = DistBase(dsym) + r.bits(DistExtra(dsym))
-              require(d <= n, "corrupt deflate: distance past output start")
-              ensure(length)
-              var j = 0
-              while (j < length) { out(n) = out(n - d); n += 1; j += 1 }
-            }
-          }
-        case _ => throw new IllegalArgumentException(
-          "corrupt deflate: reserved block type 3")
-      }
-    }
-    r.alignByte()
-    (java.util.Arrays.copyOf(out, n), r.consumed)
+  /** RFC 1950: header, DEFLATE body and Adler-32 trailer, all checked
+    * by zlib. At most `limit` bytes are expected: a stream that holds
+    * more stops inflating there and comes back `limit + 1` bytes long,
+    * so a caller that knows the exact size (PNG, from IHDR) rejects it
+    * without inflating the rest. */
+  def zlibInflate(b: Array[Byte], limit: Int = MaxOut): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(math.min(limit, 1 << 20) + 1)
+    val buf = new Array[Byte](math.min(limit, 1 << 16) + 1)
+    val inf = new Inflater()
+    try {
+      inf.setInput(b)
+      drain(inf, buf, out, limit, "zlib")
+    } finally inf.end()
+    out.toByteArray
   }
 
   /** RFC 1952 gzip decode — MULTI-MEMBER: a gzip file is a
@@ -284,52 +70,60 @@ object Inflate {
     * that (a CommonCrawl .warc.gz is one gzip member PER RECORD, which
     * is what makes the format seekable); all members' output is
     * concatenated. Header flags (FEXTRA/FNAME/FCOMMENT/FHCRC) are
-    * walked properly; the CRC-32 and ISIZE trailers of every member
-    * are verified — a corrupt archive errors, never silently truncates
-    * a corpus. */
+    * walked here; the CRC-32 and ISIZE trailers of every member are
+    * verified, and every byte must belong to a member — a corrupt,
+    * truncated or junk-trailed archive errors, never silently drops
+    * part of a corpus (`java.util.zip.GZIPInputStream` ignores what
+    * follows the last member it can read). */
   def gunzip(b: Array[Byte]): Array[Byte] = {
     require(b.length >= 18 && (b(0) & 0xff) == 0x1f && (b(1) & 0xff) == 0x8b,
       s"not a gzip payload (${b.length} bytes)")
-    val out = new java.io.ByteArrayOutputStream(b.length * 4)
-    var pos = 0
-    while (pos < b.length) {
-      require(pos + 18 <= b.length, "truncated gzip member header")
-      require((b(pos) & 0xff) == 0x1f && (b(pos + 1) & 0xff) == 0x8b,
-        f"corrupt gzip: bad member magic at offset $pos")
-      require((b(pos + 2) & 0xff) == 8,
-        s"unsupported gzip compression method ${b(pos + 2) & 0xff}")
-      val flg = b(pos + 3) & 0xff
-      require((flg & 0xe0) == 0, "corrupt gzip: reserved FLG bits set")
-      pos += 10 // MTIME/XFL/OS skipped
-      if ((flg & 0x04) != 0) { // FEXTRA
-        require(pos + 2 <= b.length, "truncated gzip FEXTRA")
-        val xlen = (b(pos) & 0xff) | ((b(pos + 1) & 0xff) << 8)
-        pos += 2 + xlen
-        require(pos <= b.length, "truncated gzip FEXTRA data")
+    val out = new java.io.ByteArrayOutputStream(
+      math.min(b.length * 4L, 1L << 26).toInt)
+    val inf = new Inflater(true) // raw DEFLATE: the member walk is ours
+    val buf = new Array[Byte](math.min(b.length * 4L, 1L << 16).toInt)
+    try {
+      var pos = 0
+      while (pos < b.length) {
+        require(pos + 18 <= b.length, "truncated gzip member header")
+        require((b(pos) & 0xff) == 0x1f && (b(pos + 1) & 0xff) == 0x8b,
+          f"corrupt gzip: bad member magic at offset $pos")
+        require((b(pos + 2) & 0xff) == 8,
+          s"unsupported gzip compression method ${b(pos + 2) & 0xff}")
+        val flg = b(pos + 3) & 0xff
+        require((flg & 0xe0) == 0, "corrupt gzip: reserved FLG bits set")
+        pos += 10 // MTIME/XFL/OS skipped
+        if ((flg & 0x04) != 0) { // FEXTRA
+          require(pos + 2 <= b.length, "truncated gzip FEXTRA")
+          val xlen = (b(pos) & 0xff) | ((b(pos + 1) & 0xff) << 8)
+          pos += 2 + xlen
+          require(pos <= b.length, "truncated gzip FEXTRA data")
+        }
+        if ((flg & 0x08) != 0) { // FNAME: zero-terminated
+          while (pos < b.length && b(pos) != 0) pos += 1
+          require(pos < b.length, "truncated gzip FNAME"); pos += 1
+        }
+        if ((flg & 0x10) != 0) { // FCOMMENT
+          while (pos < b.length && b(pos) != 0) pos += 1
+          require(pos < b.length, "truncated gzip FCOMMENT"); pos += 1
+        }
+        if ((flg & 0x02) != 0) pos += 2 // FHCRC (header crc16, skipped)
+        require(pos <= b.length, "truncated gzip header")
+        inf.reset()
+        inf.setInput(b, pos, b.length - pos)
+        val room = MaxOut - out.size()
+        val sink = new CheckedOutputStream(out, new CRC32())
+        val n = drain(inf, buf, sink, room, "gzip member")
+        require(n <= room, s"gzip output exceeds $MaxOut bytes")
+        pos = b.length - inf.getRemaining()
+        require(pos + 8 <= b.length, "truncated gzip member trailer")
+        require(sink.getChecksum.getValue == u32le(b, pos),
+          "gzip CRC-32 mismatch (corrupt member)")
+        require((n & 0xffffffffL) == u32le(b, pos + 4),
+          "gzip ISIZE mismatch (corrupt member)")
+        pos += 8
       }
-      if ((flg & 0x08) != 0) { // FNAME: zero-terminated
-        while (pos < b.length && b(pos) != 0) pos += 1
-        require(pos < b.length, "truncated gzip FNAME"); pos += 1
-      }
-      if ((flg & 0x10) != 0) { // FCOMMENT
-        while (pos < b.length && b(pos) != 0) pos += 1
-        require(pos < b.length, "truncated gzip FCOMMENT"); pos += 1
-      }
-      if ((flg & 0x02) != 0) pos += 2 // FHCRC (header crc16, skipped)
-      val (member, consumed) = rawInflate(b, pos, b.length - pos)
-      pos += consumed
-      require(pos + 8 <= b.length, "truncated gzip member trailer")
-      val crc = (b(pos) & 0xffL) | ((b(pos + 1) & 0xffL) << 8) |
-        ((b(pos + 2) & 0xffL) << 16) | ((b(pos + 3) & 0xffL) << 24)
-      val isize = (b(pos + 4) & 0xffL) | ((b(pos + 5) & 0xffL) << 8) |
-        ((b(pos + 6) & 0xffL) << 16) | ((b(pos + 7) & 0xffL) << 24)
-      pos += 8
-      require(crc32(member, 0, member.length) == crc,
-        "gzip CRC-32 mismatch (corrupt member)")
-      require((member.length & 0xffffffffL) == isize,
-        "gzip ISIZE mismatch (corrupt member)")
-      out.write(member, 0, member.length)
-    }
+    } finally inf.end()
     out.toByteArray
   }
 
@@ -361,12 +155,10 @@ object Inflate {
     for (_ <- 0 until 4) out.write(0) // MTIME
     out.write(0); out.write(255)      // XFL, OS=unknown
     writeStoredBlocks(out, data)
-    val crc = crc32(data, 0, data.length)
-    out.write((crc & 0xff).toInt); out.write(((crc >> 8) & 0xff).toInt)
-    out.write(((crc >> 16) & 0xff).toInt); out.write(((crc >> 24) & 0xff).toInt)
-    val n = data.length.toLong
-    out.write((n & 0xff).toInt); out.write(((n >> 8) & 0xff).toInt)
-    out.write(((n >> 16) & 0xff).toInt); out.write(((n >> 24) & 0xff).toInt)
+    val crc = new CRC32()
+    crc.update(data)
+    for (v <- Seq(crc.getValue, data.length.toLong); i <- 0 until 4)
+      out.write(((v >> (8 * i)) & 0xff).toInt) // CRC-32, ISIZE: LE
     out.toByteArray
   }
 
@@ -378,9 +170,10 @@ object Inflate {
     val out = new java.io.ByteArrayOutputStream(data.length + nBlocks * 5 + 6)
     out.write(0x78); out.write(0x01) // CMF/FLG: 32k window, check ok
     writeStoredBlocks(out, data)
-    val ad = adler32(data)
-    out.write(((ad >> 24) & 0xff).toInt); out.write(((ad >> 16) & 0xff).toInt)
-    out.write(((ad >> 8) & 0xff).toInt); out.write((ad & 0xff).toInt)
+    val adler = new Adler32()
+    adler.update(data)
+    for (i <- 3 to 0 by -1) // Adler-32: BE
+      out.write(((adler.getValue >> (8 * i)) & 0xff).toInt)
     out.toByteArray
   }
 }

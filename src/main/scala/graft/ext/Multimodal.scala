@@ -739,8 +739,8 @@ object Multimodal {
       // full 8-byte signature gate, matching the worker twin's routing
       // (a 4-byte prefix match with corrupt tail bytes must take the
       // SAME branch on both sides — octet-stream fallback, not error)
-      // lossless entropy-coded path: PNG through the from-scratch
-      // chunk-walk + DEFLATE decoder ([[Png.decode]]); integer-exact
+      // lossless entropy-coded path: PNG through the chunk walk,
+      // JDK zlib inflate and defilter of [[Png.decode]]; integer-exact
       // features over the expanded top-down RGB like the other images
       val (w, h, px) = Png.decode(b)
       var sum = 0L; var i = 0

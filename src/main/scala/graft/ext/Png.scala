@@ -1,19 +1,21 @@
 package graft.ext
 
-/** PNG codec (RFC 2083 / ISO 15948) on the from-scratch [[Inflate]]
-  * DEFLATE decoder — the lossless half of the entropy-coded image
-  * story ([[Jpeg]] being the lossy half; the reference,
+/** PNG codec (RFC 2083 / ISO 15948) over the JDK's zlib (through
+  * [[Inflate.zlibInflate]]) — the lossless half of the entropy-coded
+  * image story ([[Jpeg]] being the lossy half; the reference,
   * `alan-turing-institute/paqarin`, has no media surface — north-star
-  * extension). Everything is from the public spec: the 8-byte
-  * signature, chunk framing with from-scratch CRC-32 verification,
-  * IHDR geometry, PLTE palettes, multi-IDAT concatenation, and the
-  * five scanline filters (None/Sub/Up/Average/Paeth — §6; the Paeth
-  * predictor's tie-break order left/above/upper-left is load-bearing).
+  * extension). The PNG layer is from the public spec: the 8-byte
+  * signature, chunk framing with CRC-32 verification, IHDR geometry,
+  * PLTE palettes, multi-IDAT concatenation, and the five scanline
+  * filters (None/Sub/Up/Average/Paeth — §6; the Paeth predictor's
+  * tie-break order left/above/upper-left is load-bearing).
   *
   * Supported: 8-bit depth, color types 0 (gray), 2 (RGB), 3 (palette),
   * 4 (gray+alpha), 6 (RGBA), non-interlaced. Everything else — 16-bit,
   * 1/2/4-bit depths, Adam7 interlacing, missing IDAT/PLTE — fails
-  * loudly (a silent wrong decode poisons every downstream feature).
+  * loudly (a silent wrong decode poisons every downstream feature), as
+  * does image data that inflates to more or fewer bytes than IHDR
+  * implies (inflation stops just past the expected size).
   * Output is top-down RGB ([[Multimodal.bmpPixels]] layout): gray
   * replicates, palette looks up, alpha is DROPPED (features are
   * computed over opaque pixel values; compositing policy belongs to
@@ -23,11 +25,8 @@ package graft.ext
   * rather than a golden pin.
   *
   * The worker twin (`scripts/media_worker.py` `decode_png`) decodes
-  * with python's zlib — an INDEPENDENT DEFLATE implementation — and
-  * must agree bit-for-bit; DifferentialFuzzSpec additionally
-  * round-trips [[Inflate]] against `java.util.zip.Deflater` at every
-  * level/strategy. Two independent cross-checks of the from-scratch
-  * inflater.
+  * with python's zlib and must agree bit-for-bit on the defilter and
+  * color expansion.
   */
 object Png {
 
@@ -59,9 +58,9 @@ object Png {
         java.nio.charset.StandardCharsets.US_ASCII)
       val dataOff = pos + 8
       val dataLen = len.toInt
-      // CRC covers the type + data (spec §5.3); verify from scratch
+      // CRC covers the type + data (spec §5.3)
       val crc = u32be(b, dataOff + dataLen)
-      val got = Inflate.crc32(b, pos + 4, 4 + dataLen)
+      val got = crc32(b, pos + 4, 4 + dataLen)
       require(got == crc,
         f"PNG chunk '$ctype' CRC mismatch: got $got%08x, file says $crc%08x")
       ctype match {
@@ -104,11 +103,13 @@ object Png {
     val channels = colorType match {
       case 0 => 1; case 2 => 3; case 3 => 1; case 4 => 2; case 6 => 4
     }
-    val raw = Inflate.zlibInflate(idat.toByteArray, 0, idat.size())
     val stride = w * channels
-    require(raw.length == (stride + 1).toLong * h,
-      s"corrupt PNG: inflated ${raw.length} bytes, " +
-        s"expected ${(stride + 1).toLong * h} for ${w}x$h x$channels")
+    val expected = (stride + 1) * h // <= 4 x 64 MP + h: fits an Int
+    val raw = Inflate.zlibInflate(idat.toByteArray, expected)
+    val size = if (raw.length > expected) s"more than $expected"
+      else raw.length.toString
+    require(raw.length == expected, s"corrupt PNG: inflated $size bytes, " +
+      s"expected $expected for ${w}x$h x$channels")
 
     // defilter in place into a flat sample buffer (spec §6.3-6.6):
     // a/b/c = left, above, upper-left RECONSTRUCTED samples, per byte,
@@ -208,6 +209,12 @@ object Png {
     if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
   }
 
+  private def crc32(b: Array[Byte], off: Int, len: Int): Long = {
+    val c = new java.util.zip.CRC32()
+    c.update(b, off, len)
+    c.getValue
+  }
+
   private def w32be(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
     out.write(((v >> 24) & 0xff).toInt); out.write(((v >> 16) & 0xff).toInt)
     out.write(((v >> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
@@ -220,7 +227,7 @@ object Png {
     val typed = ctype.getBytes(
       java.nio.charset.StandardCharsets.US_ASCII) ++ data
     out.write(typed, 0, typed.length)
-    w32be(out, Inflate.crc32(typed, 0, typed.length))
+    w32be(out, crc32(typed, 0, typed.length))
   }
 
   /** Encode top-down RGB as an 8-bit truecolor PNG (filter 0 rows,

@@ -15,8 +15,8 @@ import graft.ext.Inflate
   * `Content-Length` bytes of block, then CRLF CRLF before the next
   * record. `.warc.gz` files are ONE GZIP MEMBER PER RECORD (what makes
   * the format seekable at scale) — [[graft.ext.Inflate.gunzip]] walks
-  * the member chain, so both plain and gzipped archives parse through
-  * one code path.
+  * the member chain (bodies inflated by the JDK's zlib, every byte in
+  * a checked member), so plain and gzipped archives share one path.
   *
   * Scale posture: [[read]] loads archives via the `binaryFile`
   * datasource — one task per file, records parsed INSIDE the task

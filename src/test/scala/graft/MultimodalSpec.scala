@@ -409,8 +409,7 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   // chunk assembler for hand-built PNG variants (gray, gray+alpha,
-  // corrupt-by-construction) — CRC from the same from-scratch table the
-  // decoder verifies against
+  // corrupt-by-construction)
   private def pngChunk(ctype: String, data: Array[Byte]): Array[Byte] = {
     val typed = ctype.getBytes("US-ASCII") ++ data
     val out = new java.io.ByteArrayOutputStream()
@@ -420,7 +419,9 @@ class MultimodalSpec extends AnyFunSuite {
     }
     w32(data.length.toLong)
     out.write(typed, 0, typed.length)
-    w32(graft.ext.Inflate.crc32(typed, 0, typed.length))
+    val crc = new java.util.zip.CRC32()
+    crc.update(typed)
+    w32(crc.getValue)
     out.toByteArray
   }
   private val pngSig = Array(0x89, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n')
@@ -553,6 +554,13 @@ class MultimodalSpec extends AnyFunSuite {
     val big = pngSig ++ pngChunk("IHDR", ihdrBig)
     val e7 = intercept[IllegalArgumentException](Png.decode(big))
     assert(e7.getMessage.contains("64 MP"))
+    // image data that inflates past its IHDR size fails loudly: a 1x1
+    // gray image expects 2 bytes, this IDAT holds 64 KB
+    val bloated = pngSig ++ pngChunk("IHDR", pngIhdr(1, 1, 0)) ++
+      pngChunk("IDAT", Inflate.zlibDeflateStored(new Array[Byte](65536))) ++
+      pngChunk("IEND", Array.emptyByteArray)
+    val e8 = intercept[IllegalArgumentException](Png.decode(bloated))
+    assert(e8.getMessage.contains("corrupt PNG: inflated more than 2 bytes"))
   }
 
   test("synth PNG decodes to its closed-form features " +

@@ -77,11 +77,13 @@ class StatefulSpec extends AnyFunSuite {
       val ckpt = Files.createTempDirectory("graft-timer-ckpt").toFile
       val outDir = Files.createTempDirectory("graft-timer-out").toFile
       ckpt.deleteOnExit(); outDir.deleteOnExit()
-      // AvailableNow runs over a shared checkpoint: a continuously
-      // triggering processing-time-timer query never goes idle, so
-      // processAllAvailable would wait forever — each run drains what's
-      // there (firing any already-expired timers) and terminates. The sink
-      // is parquet (memory sinks cannot recover from a checkpoint).
+      // One-batch runs over a shared checkpoint: each run processes what
+      // is there (firing any already-expired timers) and terminates. Not
+      // AvailableNow: with processing-time timers transformWithState asks
+      // for another (no-data) batch after every batch, so an AvailableNow
+      // query never ends on its own. The sink is parquet (memory sinks
+      // cannot recover from a checkpoint).
+      @annotation.nowarn("cat=deprecation") // Trigger.Once
       def runOnce(): Unit = {
         val stream = spark.readStream.schema(schema).parquet(dir.getAbsolutePath)
           .as[StatefulOps.Obs]
@@ -89,19 +91,19 @@ class StatefulSpec extends AnyFunSuite {
           .writeStream.outputMode("append")
           .option("checkpointLocation", ckpt.getAbsolutePath)
           .option("path", outDir.getAbsolutePath)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .trigger(org.apache.spark.sql.streaming.Trigger.Once())
           .format("parquet").start()
-        try q.awaitTermination(60000L) finally q.stop()
+        try assert(q.awaitTermination(60000L), "run did not end within 60 s")
+        finally q.stop()
       }
-      // run 1: two events for "a" -> arms a's timer (a cold first run can
-      // outlast the gap and fire it in-run — either way "a" closes once,
-      // so the assertion below is timing-independent)
+      // run 1: two events for "a" -> arms a's timer, which cannot fire in
+      // the same batch
       Seq(("a", 2.0), ("a", 3.0)).toDF("itemId", "value")
         .write.mode("append").parquet(dir.getAbsolutePath)
       runOnce()
       // quiet past the gap; run 2 (new data for "b") fires a's expired
-      // timer if still pending, while b's freshly armed session stays open
-      // (the warm run finishes well inside the gap)
+      // timer, while b's freshly armed session stays open (its timer is
+      // due after the batch's own timestamp)
       Thread.sleep(1500L)
       Seq(("b", 10.0)).toDF("itemId", "value")
         .write.mode("append").parquet(dir.getAbsolutePath)
@@ -112,12 +114,12 @@ class StatefulSpec extends AnyFunSuite {
       val got = spark.read.schema(outSchema).parquet(outDir.getAbsolutePath)
         .orderBy("itemId")
         .as[(String, Long, Double)].collect().toSeq
-      // timing-independent guarantees (a slow run can outlast the gap and
-      // close "b" too, so b's openness is not asserted): the idle key "a"
-      // closed EXACTLY once — the timer fired, the state cleared (no
-      // duplicate emission across two runs), and the aggregate is intact
+      // the idle key "a" closed EXACTLY once — the timer fired, the state
+      // cleared (no duplicate emission across two runs), and the
+      // aggregate is intact; "b" is still open
       assert(got.filter(_._1 == "a") == Seq(("a", 2L, 5.0)))
       assert(got.groupBy(_._1).forall(_._2.size == 1))
+      assert(!got.exists(_._1 == "b"))
     } finally prev match {
       case Some(v) =>
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
