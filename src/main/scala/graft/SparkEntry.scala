@@ -708,12 +708,7 @@ object SparkEntry {
     * thing: per-source distinct gram sets, pair intersections, sizes,
     * Jaccard. */
   private def dedupSourceOverlap(s: SparkSession, dir: String): DataFrame =
-    // materialize=false: fully declarative (ReuseExchange shares the one
-    // gram aggregate between the size and pair branches — no checkpoint
-    // state a cloned bench repetition could illegitimately re-read), the
-    // mixture/bm25 bench-honesty posture
-    Dedup.sourceOverlap(T(s, dir, "documents"), "text", "source", n = 3,
-        materialize = false)
+    Dedup.sourceOverlap(T(s, dir, "documents"), "text", "source", n = 3)
       .orderBy(col("source_a"), col("source_b"))
 
   /** Per-group embedding centroid drift ([[Similarity.centroidDrift]]):
@@ -1436,18 +1431,6 @@ object SparkEntry {
         round(col("quality_score"), 6).as("quality_score"))
       .orderBy(col("doc_id"))
 
-  /** Corpus pruning by score percentile — "drop the bottom quartile by
-    * quality" via [[TextAnalysis.pruneBottomQuantile]]: the corpus is
-    * scored ONCE into a narrow (doc_id, lang, score) frame; the threshold
-    * is a scalar subquery over that same materialized frame, so the
-    * tokenizing kernel pass never runs twice (it is the dominant cost —
-    * at 100 TB a second pass doubles the scan+score work). Threshold
-    * comparisons are safe unrounded: both engines derive the scores from
-    * identical IEEE ops on identical ints, and the interpolated threshold
-    * either equals a shared score value exactly or falls strictly between
-    * two of them. Non-memoizable: the checkpointed score frame must be
-    * rebuilt per bench rep or reps measure re-reads while DuckDB
-    * re-scores. */
   /** O11 — exact global score rank + percent_rank WITHOUT a
     * single-partition window ([[ops.Ranks.globalValueRanks]]): distinct
     * scores range-partitioned, parallel within-partition running counts,
@@ -1538,10 +1521,16 @@ object SparkEntry {
       .orderBy(col("source"))
   }
 
+  /** Corpus pruning by score percentile — "drop the bottom quartile by
+    * quality" via [[TextAnalysis.pruneBottomQuantile]]: one declarative
+    * plan over a narrow (doc_id, lang, score) frame, the one-row
+    * threshold broadcast onto the filter. Threshold comparisons are safe
+    * unrounded: both engines derive the scores from identical IEEE ops on
+    * identical ints, and the interpolated threshold either equals a
+    * shared score value exactly or falls strictly between two of them. */
   private def textQualityPrune(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.pruneBottomQuantile(
-        T(s, dir, "documents"), "text", 0.25, Seq("doc_id", "lang"),
-        materialize = false)
+        T(s, dir, "documents"), "text", 0.25, Seq("doc_id", "lang"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_kept"),
         round(min(col("quality_score")), 6).as("min_score"))
@@ -1551,11 +1540,10 @@ object SparkEntry {
     * ([[TextAnalysis.pruneBottomQuantilePerGroup]]): every source loses
     * its OWN bottom 25 % — the source-fair gate a global threshold
     * can't express. Thresholds are a |sources|-row exact-percentile
-    * aggregate broadcast onto the once-scored narrow frame. */
+    * aggregate broadcast onto the narrow scored frame. */
   private def textPruneBySource(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.pruneBottomQuantilePerGroup(
-        T(s, dir, "documents"), "text", 0.25, "source", Seq("doc_id", "lang"),
-        materialize = false)
+        T(s, dir, "documents"), "text", 0.25, "source", Seq("doc_id", "lang"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_kept"),
         round(min(col("quality_score")), 6).as("min_score"),
@@ -1839,18 +1827,15 @@ object SparkEntry {
     * the md5-priority-ordered prefix of documents whose running token sum
     * fits half the language's token total. The bucketed plan
     * ([[TextAnalysis.mixtureByTokenBudget]]) never sorts a whole group:
-    * bucket sums classify buckets against the budget and only the one
-    * straddling bucket per group pays an exact window. The oracle replays
-    * the equivalent global cumulative window. materialize=false: at this
-    * corpus size the declarative form (narrow frame re-derived map-only
-    * per consumer) beats the checkpoint round-trip, and the query is then
-    * a pure plan (memoizable like any other; a rep re-executes every
-    * tokenize pass). */
+    * bucket sums give each bucket its offset against the budget and the
+    * exact window runs per (group, bucket). The oracle replays the
+    * equivalent global cumulative window. One pure plan (memoizable; a
+    * rep re-executes every tokenize pass). */
   private def textMixture(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.mixtureByTokenBudget(
         T(s, dir, "documents"), "doc_id", "lang", "text",
         budgetFraction = 0.5, seed = "42", numBuckets = 64,
-        broadcastStatus = false, materialize = false)
+        broadcastStatus = false)
       .orderBy(col("doc_id"))
 
   /** PII-redaction gate over the corpus: the synthetic documents carry no
@@ -2120,13 +2105,12 @@ object SparkEntry {
     * no-full-group-window plan as text_mixture; the oracle replays the
     * α-weighted budget arithmetic (integerized weights, so no float
     * summation-order can flip a floor) and the global cumulative window.
-    * materialize=false: same declarative small-corpus posture as
-    * text_mixture (pure plan, memoizable; reps re-execute every pass). */
+    * One pure plan, like text_mixture. */
   private def textMixtureTemp(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.mixtureByTemperature(
         T(s, dir, "documents"), "doc_id", "lang", "text",
         alpha = 0.5, budgetFraction = 0.5, seed = "42", numBuckets = 64,
-        broadcastStatus = false, materialize = false)
+        broadcastStatus = false)
       .orderBy(col("doc_id"))
 
   /** Domain-level quality gate ([[UrlOps.dropLowQualityDomainsNarrow]]):
@@ -2211,15 +2195,13 @@ object SparkEntry {
     * kept tokens; N counts docs with ≥1 token). */
   private def retBm25(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // materialize=false: at this corpus size the declarative posting
-    // frame (re-derived map-only per consumer) beats the checkpoint
-    // round-trip; construction's only action tokenizes the 3 literal
-    // queries (no corpus access) — still a SQL execution, so the registry
-    // rebuilds the query per call
+    // construction's only action tokenizes the 3 literal queries (no
+    // corpus access) — still a SQL execution, so the registry rebuilds
+    // the query per call
     ext.Retrieval.bm25TopK(
         T(s, dir, "documents"), "doc_id", "text",
         retrievalQueries.toDF("query_id", "qtext"), "query_id", "qtext",
-        k = 10, materialize = false)
+        k = 10)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -2279,13 +2261,12 @@ object SparkEntry {
 
   /** TF-IDF weights for a fixed 4-term vocabulary
     * ([[ext.Retrieval.tfidfForVocab]]): the sparse-feature sibling of
-    * ret_bm25 — same one-scan posting checkpoint, vocab-sized broadcast
-    * everywhere else. */
+    * ret_bm25 — same declarative vocab-kernel frame, vocab-sized
+    * broadcast everywhere else. */
   private def retTfidf(s: SparkSession, dir: String): DataFrame =
     ext.Retrieval.tfidfForVocab(
         T(s, dir, "documents"), "doc_id", "text",
-        Seq("spark", "customer", "vector", "merge"),
-        materialize = false) // declarative bench posture (clone-honest)
+        Seq("spark", "customer", "vector", "merge"))
       .orderBy(col("doc_id"), col("term"))
 
   /** TF-IDF served from the SAME persisted bundle as [[retBm25Serve]]

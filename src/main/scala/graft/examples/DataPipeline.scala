@@ -265,7 +265,10 @@ object DataPipeline {
     *  9. unigram-LM quality pruning (CCNet-style): fit an add-1 model on
     *     the curated corpus itself, score every doc in one kernel pass,
     *     and drop the worst decile by mean log-probability (threshold is
-    *     a scalar subquery — one plan, no driver round-trip)
+    *     a scalar subquery — one plan, no driver round-trip). The pruned
+    *     frame is checkpointed here, once (lazy `localCheckpoint`): both
+    *     the mixture's narrow frame and the survivors' semi-join read
+    *     it, so the scoring pass runs once
     *  10. token-budget mixture sampling: each predicted language keeps
     *      its hash-priority document prefix up to `mixFraction` of its
     *      token mass (data mixing; survivors semi-join back, so the text
@@ -295,6 +298,7 @@ object DataPipeline {
       .filter(col("avg_lp") >= GraftColumnBridge.column(
         ScalarSubquery(thr.queryExecution.analyzed)))
       .drop("sum_lp", "n_tok", "n_oov", "avg_lp")
+      .localCheckpoint(eager = false) // materialized by its first reader
     val keep = TextAnalysis.mixtureByTokenBudget(
       pruned, "doc_id", "predicted_lang", "text", mixFraction)
     val mixed = pruned.join(

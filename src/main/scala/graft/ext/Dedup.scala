@@ -1340,8 +1340,7 @@ object Dedup {
       n: Int = 3,
       hashGrams: Boolean = false,
       maxSourcesPerGram: Int = Int.MaxValue,
-      roundTo: Int = 6,
-      materialize: Boolean = true): DataFrame = {
+      roundTo: Int = 6): DataFrame = {
     require(maxSourcesPerGram >= 2,
       s"maxSourcesPerGram must allow pairs (>= 2), got $maxSourcesPerGram")
     val gramKey: Column => Column =
@@ -1356,12 +1355,8 @@ object Dedup {
       .agg(collect_set(col("__src")).as("__srcs"))
       .filter(size(col("__srcs")) <= maxSourcesPerGram)
       .drop("__g") // downstream consumers only read the source sets
-    // `materialize` kept for API stability: the single-generate shape
-    // below reads the per-gram sets exactly once, so there is nothing
-    // left for a checkpoint to save — both postures are the same pure
-    // plan now (round-19; the old sizes-branch/pairs-branch split paid
-    // the corpus gram pass twice when declarative).
-    val _ = materialize
+    // one pure plan: the single-generate shape below reads the per-gram
+    // sets exactly once, so there is nothing for a checkpoint to save
     // ONE OrderedPairs(includeSelf) kernel eval per gram emits the
     // C(s,2) strict pairs AND one (s, s) marker per member, so a single
     // aggregate carries both the pair co-occurrence counts and the

@@ -69,7 +69,7 @@ object Retrieval {
       corpus: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, queryIdCol: String, queryTextCol: String,
       k: Int, k1: Double = 1.2, b: Double = 0.75,
-      roundScoreTo: Int = 4, materialize: Boolean = true): DataFrame = {
+      roundScoreTo: Int = 4): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(k1 >= 0, s"k1 must be non-negative, got $k1")
     require(b >= 0 && b <= 1, s"b must be in [0, 1], got $b")
@@ -115,11 +115,9 @@ object Retrieval {
       // posting stream (the shape the fused vocab kernel would turn into
       // a |vocab|-wide per-row scan, and the static per-query scoring
       // into an unboundedly wide projection)
-      val raw = postings(corpus, idCol, textCol, "__t", "__tf", "__dl")
-      val tf = if (materialize) raw.localCheckpoint(eager = false) else raw
       return bm25TopKDistributedDf(
-        tf, idCol, queries, queryIdCol, queryTextCol, k, k1, b,
-        roundScoreTo)
+        postings(corpus, idCol, textCol, "__t", "__tf", "__dl"), idCol,
+        queries, queryIdCol, queryTextCol, k, k1, b, roundScoreTo)
     }
 
     // NARROW vocab-kernel arm (round-19, the tfidfForVocab pattern): the
@@ -132,25 +130,20 @@ object Retrieval {
     // postings)). avgdl via exact long sums then one double division
     // (avg() would sum doubles in Spark but exact integers in DuckDB —
     // an engine-visible ulp); long sums are order-independent, so both
-    // engines agree bit-for-bit. `materialize = true` (default) lazily
-    // checkpoints the narrow frame — the text is tokenized exactly once
-    // and both consumers (stats, scoring) re-read KB-scale blocks;
-    // `materialize = false` keeps the plan declarative (two kernel
-    // passes, nothing a cloned repetition could illegitimately reuse).
+    // engines agree bit-for-bit. The plan stays declarative: the stats
+    // and the scoring each run the kernel pass over the corpus (two
+    // passes, map-only), and a cloned rep has nothing cached to reuse.
     import org.apache.spark.sql.GraftColumnBridge
     // NO dl > 0 filter on the frame: PushPredicateThroughProject would
     // substitute the kernel into the filter and evaluate it TWICE per
     // row (pinned by PlanContractSpec). Empty docs stay as all-zero rows
     // — the conditional stats exclude them from N/Σdl and the scoring
     // `keep` gate drops them (all tfs are 0).
-    val narrowBase = graft.ops.Par.fanOutSmallScan(corpus)
+    val narrow = graft.ops.Par.fanOutSmallScan(corpus)
       .select(col(idCol), GraftColumnBridge.column(graft.functions.VocabTfs(
         GraftColumnBridge.expression(col(textCol)), vs)).as("__v"))
       .select(col(idCol), col("__v").getField("dl").as("__dl"),
         col("__v").getField("tfs").as("__vtfs"))
-    val narrow =
-      if (materialize) narrowBase.localCheckpoint(eager = false)
-      else narrowBase
 
     // docs with ≥1 kept token form the collection (the N membership)
     val nDocs = sum(when(col("__dl") > 0L, 1L).otherwise(0L))
@@ -499,15 +492,14 @@ object Retrieval {
 
   /** TF-IDF document term weights for the query vocabulary — the linear
     * sibling of [[bm25TopK]] for cosine/dot retrieval and for feeding
-    * sparse features to a downstream classifier. Same one-scan posting
-    * checkpoint, same broadcast query vocabulary; returns one row per
+    * sparse features to a downstream classifier. Same declarative
+    * vocab-kernel frame, same broadcast query vocabulary; returns one row per
     * (doc, term ∈ vocab) with `tf`, `df` and `tfidf` = tf · ln(1 + (N −
     * df + 0.5)/(df + 0.5)).
     */
   def tfidfForVocab(
       corpus: DataFrame, idCol: String, textCol: String,
-      vocab: Seq[String], roundTo: Int = 4,
-      materialize: Boolean = true): DataFrame = {
+      vocab: Seq[String], roundTo: Int = 4): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge
     require(vocab.nonEmpty, "vocab must be non-empty")
     requireNotReserved(idCol)
@@ -516,20 +508,12 @@ object Retrieval {
     // the per-doc frame is (id, has_tok, |vocab| counts) — the full
     // posting stream (every distinct term × every doc) that the previous
     // form materialized only to keep |vocab| terms of it never exists.
-    // materialize=true (default, the corpus-scale posture): the narrow
-    // frame lazily checkpoints and every consumer (collection stats, the
-    // df build, the tf stream) re-reads the blocks — the text is
-    // tokenized exactly once. materialize=false: fully declarative —
-    // each consumer branch re-runs the kernel pass (three at bench
-    // scale), but the plan is pure and a repetition harness's clones
-    // re-pay every pass like the oracle engine does (the
-    // pruneBottomQuantile posture note applies verbatim).
-    val narrowBase = graft.ops.Par.fanOutSmallScan(corpus)
+    // The plan stays declarative: the collection stats and the tf stream
+    // each re-run the kernel pass, map-only, and a cloned rep re-pays
+    // every pass like the oracle engine does.
+    val narrow = graft.ops.Par.fanOutSmallScan(corpus)
       .select(col(idCol), GraftColumnBridge.column(graft.functions.VocabTfs(
         GraftColumnBridge.expression(col(textCol)), vs)).as("__v"))
-    val narrow =
-      if (materialize) narrowBase.localCheckpoint(eager = false)
-      else narrowBase
     // ONE collection-statistics aggregate carries BOTH N (docs with ≥1
     // kept token, same choice as bm25TopK) and the per-term document
     // frequencies as a |vocab|-length array — a single one-row broadcast

@@ -109,95 +109,61 @@ object TextAnalysis {
         round(avg(col("n_words").cast("double")), roundTo).as("avg_words"))
 
   /** Quality-percentile pruning — the standard "drop the bottom quantile
-    * by quality" curation gate — with the corpus scored EXACTLY ONCE.
+    * by quality" curation gate — as ONE declarative plan.
     *
-    * The naive formulation scores twice: the percentile aggregate and the
-    * filter are two consumers of the same unshared scored subtree, so the
-    * tokenizing kernel pass (the dominant cost — it reads the full text)
-    * runs once per branch. Here the scored frame is projected down to
-    * `keepCols + quality_score` and lazily `localCheckpoint`ed: the
-    * threshold subquery's job materializes it (narrow rows — ids and
-    * metadata, never the text), and the filter re-reads the materialized
-    * blocks. The threshold enters the filter as a SCALAR SUBQUERY (same
-    * one-query-execution shape as the Bloom prescreen aggregate in
-    * [[graft.ext.Dedup.bloomPrescreenOverlap]]), so at 100 TB the plan is:
-    * one scan+score of the text, two cheap passes over the narrow scored
-    * frame.
+    * The scored frame is projected down to `keepCols + quality_score`
+    * (narrow rows — ids and metadata, never the text). The threshold is a
+    * one-row percentile aggregate over that frame, attached to the filter
+    * through an in-plan broadcast rather than a scalar subquery: a scalar
+    * subquery's result is cached by its SubqueryExec, which a cloned
+    * plan would silently reuse, while the broadcast keeps the plan pure
+    * (memoizable, re-plannable, cloned reps re-pay every pass). The
+    * threshold branch and the filter branch each run the map-only
+    * scoring kernel — the text is scanned twice but never shuffles.
     *
     * `keepCols` must carry everything downstream needs — re-attach heavy
     * columns (the text itself) by key afterwards if required, e.g. via a
     * semi-join or [[graft.ext.Dedup.bloomPrescreenOverlap]]. The exact
     * `percentile` is the portable twin of the `approx_percentile` sketch a
-    * 100 TB run would use (same plan shape, sketch-vs-sort agg).
-    *
-    * NOTE for benchmark harnesses: the checkpoint blocks are owned by the
-    * returned frame's lineage — a repetition harness must rebuild the
-    * query per rep (and reclaim the blocks) or it measures re-reads of the
-    * materialized score frame while an oracle engine re-scores per run.
+    * 100 TB run would use (same plan shape, sketch-vs-sort agg). A caller
+    * that reads the result more than once should checkpoint it itself,
+    * as [[graft.examples.DataPipeline.prepareTraining]] does.
     */
   def pruneBottomQuantile(
       df: DataFrame, textCol: String, quantile: Double,
-      keepCols: Seq[String], materialize: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.ScalarSubquery
-    // materialize=true (default, the corpus-scale posture): score ONCE
-    // into the lazy narrow checkpoint; both the threshold SUBQUERY and
-    // the filter re-read the materialized blocks — the text is scanned
-    // exactly once. materialize=false: fully declarative — each branch
-    // re-runs the map-only scoring kernel (the
-    // pruneBottomQuantilePerGroup trade-off note applies verbatim), and
-    // the ONE-ROW threshold rides an in-plan broadcast instead of a
-    // subquery (a pure plan; a scalar subquery's result is cached by its
-    // SubqueryExec, which a repetition harness's plan clones would
-    // silently reuse — the ret_bm25 one-row stats-sidecar class).
-    // Identical rows either way (QualityPruneSpec pins it).
+      keepCols: Seq[String]): DataFrame = {
     val base = qualityFeatures(df, textCol)
       .select(keepCols.map(col) :+ col("quality_score"): _*)
-    if (materialize) {
-      val scored = base.localCheckpoint(eager = false)
-      val thr = scored.agg(
-        expr(s"percentile(quality_score, ${quantile}D)").as("__thr"))
-      scored.filter(col("quality_score") >= GraftColumnBridge.column(
-        ScalarSubquery(thr.queryExecution.analyzed)))
-    } else {
-      val thr = base.agg(
-        expr(s"percentile(quality_score, ${quantile}D)").as("__thr"))
-      // coalesce makes the compared value NON-NULLABLE (scores are ≥ 0,
-      // so -1 never passes — null-score docs drop exactly like the
-      // subquery path): otherwise the join condition infers
-      // isnotnull(quality_score), which pushes below the Project and
-      // re-inlines the scoring kernel THREE more times into the filter
-      base.join(broadcast(thr))
-        .filter(coalesce(col("quality_score"), lit(-1.0)) >= col("__thr"))
-        .drop("__thr")
-    }
+    val thr = base.agg(
+      expr(s"percentile(quality_score, ${quantile}D)").as("__thr"))
+    // coalesce makes the compared value NON-NULLABLE (scores are ≥ 0,
+    // so -1 never passes — null-score docs drop, as a null compare
+    // would drop them): otherwise the join condition infers
+    // isnotnull(quality_score), which pushes below the Project and
+    // re-inlines the scoring kernel THREE more times into the filter
+    base.join(broadcast(thr))
+      .filter(coalesce(col("quality_score"), lit(-1.0)) >= col("__thr"))
+      .drop("__thr")
   }
 
   /** Per-GROUP bottom-quantile prune — the source-fair quality gate:
     * each group (source, language) loses its own bottom `quantile`
     * rather than sharing one global threshold a biased scorer would let
-    * one source dominate. Same narrow-checkpoint shape as
+    * one source dominate. Same declarative shape as
     * [[pruneBottomQuantile]], but the thresholds are a |groups|-row
     * aggregate (exact interpolated `percentile` per group — the
     * `approx_percentile` swap is the documented 10⁹-docs-per-group knob)
-    * broadcast back onto the scored frame; one scoring pass, one tiny
+    * broadcast back onto the scored frame; the threshold branch and the
+    * filter branch each run the map-only scoring kernel, one tiny
     * broadcast, no window, no driver scalar. */
   def pruneBottomQuantilePerGroup(
       df: DataFrame, textCol: String, quantile: Double, groupCol: String,
-      keepCols: Seq[String], materialize: Boolean = true): DataFrame = {
+      keepCols: Seq[String]): DataFrame = {
     require(quantile >= 0 && quantile < 1,
       s"quantile must be in [0, 1), got $quantile")
     require(!keepCols.contains(groupCol), "groupCol is always kept")
-    // materialize=true: score ONCE into a lazy narrow checkpoint both
-    // consumers re-read (the corpus-scale posture). materialize=false:
-    // fully declarative — the threshold branch and the filter branch each
-    // re-run the map-only scoring kernel, but the plan is pure
-    // (memoizable, re-plannable) and at small/medium corpus the repeated
-    // kernel pass is cheaper than the per-call checkpoint round-trip —
-    // the mixture/bm25 posture, identical rows either way (spec'd).
-    val base = qualityFeatures(df, textCol)
+    val scored = qualityFeatures(df, textCol)
       .select((keepCols :+ groupCol).map(col) :+ col("quality_score"): _*)
-    val scored = if (materialize) base.localCheckpoint(eager = false) else base
     val thr = scored.groupBy(col(groupCol))
       .agg(expr(s"percentile(quality_score, ${quantile}D)").as("__thr"))
     scored.join(broadcast(thr), Seq(groupCol))
@@ -206,57 +172,24 @@ object TextAnalysis {
   }
 
   /** [[pruneBottomQuantile]] that returns the SURVIVING ROWS with all
-    * original columns — the text included — plus `quality_score`. Two
-    * deliberate scale strategies for carrying the heavy columns through:
-    *
-    *  - `"rescore"` (default): the threshold comes from one narrow
-    *    scoring pass (a scalar subquery, as in [[pruneBottomQuantile]]);
-    *    a SECOND map-only pass then re-scores the corpus and filters in
-    *    place. The text is scanned twice but NEVER shuffles — at 100 TB,
-    *    re-running a per-row kernel is usually far cheaper than a
-    *    corpus-wide exchange. (Distinct from the round-4 defect in the
-    *    metadata-only query, where the second scoring pass bought
-    *    nothing: here it is the price of keeping the text shuffle-free,
-    *    paid knowingly.)
-    *  - `"join"`: score ONCE into a narrow (id, score) checkpoint,
-    *    filter it, and join the survivors back to the corpus by `idCol`
-    *    — one scoring pass total, but both sides exchange on the id.
-    *    Right when scoring dominates the scan (expensive kernels,
-    *    short rows) or the corpus is already bucketed by `idCol` (the
-    *    corpus-side exchange is then free).
-    *
-    * Identical row sets either way (spec'd). `idCol` must be unique per
-    * row (the join strategy attaches the score by it).
+    * original columns — the text included — plus `quality_score`. The
+    * threshold comes from one narrow scoring pass (a scalar subquery); a
+    * SECOND map-only pass then re-scores the corpus and filters in place.
+    * The text is scanned twice but NEVER shuffles — at 100 TB, re-running
+    * a per-row kernel is usually far cheaper than a corpus-wide exchange.
     */
   def pruneBottomQuantileKeep(
-      df: DataFrame, textCol: String, quantile: Double, idCol: String,
-      strategy: String = "rescore"): DataFrame = {
+      df: DataFrame, textCol: String, quantile: Double): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge
     import org.apache.spark.sql.catalyst.expressions.ScalarSubquery
-    def thresholdOver(scored: DataFrame): Column = GraftColumnBridge.column(
-      ScalarSubquery(scored
-        .agg(expr(s"percentile(quality_score, ${quantile}D)").as("__thr"))
-        .queryExecution.analyzed))
-    strategy match {
-      case "rescore" =>
-        val narrow = qualityFeatures(df, textCol).select(col("quality_score"))
-        val helper = Seq("n_chars_q", "n_words", "n_punct", "n_stop", "stop_ratio")
-        qualityFeatures(df, textCol)
-          .filter(col("quality_score") >= thresholdOver(narrow))
-          .drop(helper: _*)
-      case "join" =>
-        val scored = qualityFeatures(df, textCol)
-          .select(col(idCol), col("quality_score"))
-          .localCheckpoint(eager = false)
-        val survivors = scored
-          .filter(col("quality_score") >= thresholdOver(scored))
-        df.join(survivors, Seq(idCol))
-          // same column order as the rescore strategy (join moves the
-          // using-column first)
-          .select(df.columns.map(col) :+ col("quality_score"): _*)
-      case other => throw new IllegalArgumentException(
-        s"pruneBottomQuantileKeep strategy must be 'rescore' or 'join', got '$other'")
-    }
+    val narrow = qualityFeatures(df, textCol).select(col("quality_score"))
+    val thr = ScalarSubquery(narrow
+      .agg(expr(s"percentile(quality_score, ${quantile}D)").as("__thr"))
+      .queryExecution.analyzed)
+    val helper = Seq("n_chars_q", "n_words", "n_punct", "n_stop", "stop_ratio")
+    qualityFeatures(df, textCol)
+      .filter(col("quality_score") >= GraftColumnBridge.column(thr))
+      .drop(helper: _*)
   }
 
   /** Token-budget mixture sampling ("data mixing"): per group (language,
@@ -273,18 +206,17 @@ object TextAnalysis {
     * (English at 100 TB), which no executor can sort. Here the window
     * never sees the full group:
     *
-    *  1. one narrow scan computes (id, group, n_tok, priority, bucket)
-    *     where `bucket` is a monotone function of the priority's leading
-    *     20 bits — lazily `localCheckpoint`ed, ids and counts only, the
-    *     text never shuffles and is tokenized exactly once;
+    *  1. one narrow map-only pass computes (id, group, n_tok, priority,
+    *     bucket) where `bucket` is a monotone function of the priority's
+    *     leading 20 bits — ids and counts only, the text never shuffles;
     *  2. per-(group, bucket) token sums aggregate map-side into at most
     *     `numBuckets` rows per group; a bucket-level running sum over that
-    *     TINY frame classifies each bucket: fully inside the budget,
-    *     straddling it, or past it;
-    *  3. fully-inside buckets keep all docs via a broadcast join — no
-    *     sort, no shuffle of the corpus; only the ONE straddling bucket
-    *     per group (≈ group/`numBuckets` docs) pays an exact within-bucket
-    *     cumulative window, offset by the preceding buckets' total.
+    *     TINY frame gives each bucket its offset, and buckets wholly past
+    *     the budget drop out;
+    *  3. the surviving buckets join back to the narrow frame, and an exact
+    *     within-bucket cumulative window (≈ group/`numBuckets` docs per
+    *     partition), offset by the preceding buckets' total, keeps each
+    *     doc whose running sum fits the budget.
     *
     * Identical row set to the naive window (spec'd, including
     * `numBuckets = 1`, which degenerates to the naive form). Size
@@ -293,16 +225,14 @@ object TextAnalysis {
     *
     * Returns the surviving (id, group, n_tok) rows. Budgets are
     * `floor(budgetFraction × the group's total tokens)` — derived from
-    * the same checkpointed narrow frame, no second text scan.
+    * the bucket sums, no separate per-group aggregate.
     */
   def mixtureByTokenBudget(
       df: DataFrame, idCol: String, groupCol: String, textCol: String,
       budgetFraction: Double, seed: String = "42",
-      numBuckets: Int = 4096, broadcastStatus: Boolean = true,
-      materialize: Boolean = true): DataFrame =
+      numBuckets: Int = 4096, broadcastStatus: Boolean = true): DataFrame =
     mixtureSelect(
-      narrowMixtureFrame(df, idCol, groupCol, textCol, seed, numBuckets,
-        materialize),
+      narrowMixtureFrame(df, idCol, groupCol, textCol, seed, numBuckets),
       idCol, groupCol, broadcastStatus,
       // the group total is the full-frame window sum over the same tiny
       // bucket rows — the budget costs no separate per-group aggregate
@@ -326,20 +256,8 @@ object TextAnalysis {
       df: DataFrame, idCol: String, groupCol: String, textCol: String,
       budgets: DataFrame, budgetCol: String, seed: String,
       numBuckets: Int, broadcastStatus: Boolean): DataFrame =
-    mixtureByTokenBudget(df, idCol, groupCol, textCol, budgets, budgetCol,
-      seed, numBuckets, broadcastStatus, materialize = true)
-
-  /** [[mixtureByTokenBudget]] (explicit-budgets form) with the
-    * materialization posture exposed — Scala forbids default arguments on
-    * both overloads, hence the two-arity pair. */
-  def mixtureByTokenBudget(
-      df: DataFrame, idCol: String, groupCol: String, textCol: String,
-      budgets: DataFrame, budgetCol: String, seed: String,
-      numBuckets: Int, broadcastStatus: Boolean,
-      materialize: Boolean): DataFrame =
     mixtureSelect(
-      narrowMixtureFrame(df, idCol, groupCol, textCol, seed, numBuckets,
-        materialize),
+      narrowMixtureFrame(df, idCol, groupCol, textCol, seed, numBuckets),
       idCol, groupCol, broadcastStatus,
       cum => {
         // one row per group: broadcast under the same bounded-cardinality
@@ -349,43 +267,35 @@ object TextAnalysis {
         cum.join(if (broadcastStatus) broadcast(b) else b, Seq(groupCol))
       })
 
-  /** The once-computed (id, group, n_tok, priority, bucket) frame behind
-    * both [[mixtureByTokenBudget]] forms.
-    *
-    * `materialize` (default) lazily `localCheckpoint`s it, so the three
-    * downstream consumers re-read narrow blocks and the text is tokenized
-    * EXACTLY once — the corpus-scale posture. `materialize = false` keeps
-    * the frame declarative: consumers re-derive it (the text is tokenized
-    * up to three times, map-only, never shuffled) but the whole mixture
-    * is then one pure plan — no mid-plan state, re-plannable/cacheable by
-    * the session like any other query, and at small/medium corpus the
-    * repeated fanned map pass is cheaper than the per-call checkpoint
-    * round-trip. Identical rows either way (spec'd). */
+  /** The (id, group, n_tok, priority, bucket) frame behind every
+    * mixture form. It stays declarative: each consumer re-derives it (the
+    * text is tokenized up to three times, map-only, never shuffled), so
+    * the whole mixture is one pure plan — no mid-plan state,
+    * re-plannable and memoizable like any other query. A caller whose
+    * input is itself expensive checkpoints that input once, as
+    * [[graft.examples.DataPipeline.prepareTraining]] does. */
   private def narrowMixtureFrame(
       df: DataFrame, idCol: String, groupCol: String, textCol: String,
-      seed: String, numBuckets: Int, materialize: Boolean = true): DataFrame = {
+      seed: String, numBuckets: Int): DataFrame = {
     require(numBuckets >= 1 && numBuckets <= (1 << 20),
       s"numBuckets must be in [1, 2^20], got $numBuckets")
     val pri = graft.ops.Sampling.hashPriority(col(idCol), seed)
     // leading 5 hex chars = 20 bits; (v * numBuckets) / 2^20 is a monotone
     // map, so bucket order agrees with full-priority lexicographic order
     // (exact in double: v * numBuckets < 2^40 << 2^53)
-    val narrow = graft.ops.Par.fanOutSmallScan(df)
+    graft.ops.Par.fanOutSmallScan(df)
       .select(col(idCol), col(groupCol),
         tokenCount(col(textCol)).as("n_tok"), pri.as("__pri"))
       .withColumn("__bucket",
         floor(graft.ops.Sampling.priorityPrefix(col("__pri"), 5)
           * numBuckets / pow(lit(2), lit(20))).cast("int"))
-    // materialized by the first consumer
-    if (materialize) narrow.localCheckpoint(eager = false) else narrow
   }
 
   /** Mixture selection over the narrow scored frame. `attachBudget` adds
     * `__budget` (long) to the per-bucket running-sum frame. The narrow
-    * frame's materialized blocks are scanned three times — once into the
-    * bucket aggregate and once per kept-branch (full / straddling) of the
-    * status join; the TEXT is still tokenized exactly once, upstream of
-    * the checkpoint. `broadcastStatus` controls the status-join strategy:
+    * frame feeds both the bucket aggregate and the kept side of the
+    * status join.
+    * `broadcastStatus` controls the status-join strategy:
     * status holds ≤ `numBuckets` rows PER GROUP, so with bounded group
     * cardinality (languages, sources) the broadcast keeps the narrow
     * frame from shuffling — but with huge cardinality (per-domain mixing,
@@ -630,7 +540,7 @@ object TextAnalysis {
     * `budgetFraction ×` the corpus token total, then the same
     * deterministic hash-priority prefix selection as
     * [[mixtureByTokenBudget]] — bucketed, no full-group window, the text
-    * tokenized exactly once.
+    * never shuffled.
     *
     * Determinism note: with `integerWeights` (the default) the per-group
     * weight is `floor(total_g^α)` as a LONG, so the normalization sums
@@ -647,14 +557,12 @@ object TextAnalysis {
       df: DataFrame, idCol: String, groupCol: String, textCol: String,
       alpha: Double, budgetFraction: Double, seed: String = "42",
       numBuckets: Int = 4096, broadcastStatus: Boolean = true,
-      integerWeights: Boolean = true,
-      materialize: Boolean = true): DataFrame = {
+      integerWeights: Boolean = true): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
     require(budgetFraction >= 0 && budgetFraction <= 1,
       s"budgetFraction must be in [0, 1], got $budgetFraction")
     mixtureSelect(
-      narrowMixtureFrame(df, idCol, groupCol, textCol, seed, numBuckets,
-        materialize),
+      narrowMixtureFrame(df, idCol, groupCol, textCol, seed, numBuckets),
       idCol, groupCol, broadcastStatus,
       cum => {
         // group totals, weights and the normalizer all derive from the

@@ -331,9 +331,13 @@ object TimeSeriesOps {
     val keyed = addSurrogateKey(df, idCols, orderCol)
     val daily = resampleSum(keyed, "surrogate_item_id", tsCol, valueCols, unit)
     val filled = calendarFill(daily, "surrogate_item_id", "bucket", valueCols)
-    val seqLen = filled.select(col("bucket")).distinct().count()
-    val n = filled.select(col("surrogate_item_id")).distinct().count()
-    NormalisedSequences(filled, n, seqLen)
+    // both counts in ONE job over the resample-and-fill plan; a null
+    // counts as one value, as it does for distinct().count()
+    def distinctCount(c: Column): Column = count_distinct(c) +
+      coalesce(max(when(c.isNull, 1L).otherwise(0L)), lit(0L))
+    val counts = filled.agg(distinctCount(col("bucket")),
+      distinctCount(col("surrogate_item_id"))).head()
+    NormalisedSequences(filled, counts.getLong(1), counts.getLong(0))
   }
 
   /** A12 (adapted) — frequency inference per entity as the median

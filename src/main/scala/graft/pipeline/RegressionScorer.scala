@@ -95,7 +95,9 @@ final class RegressionScorer(
       }.toMap
     }
 
-    val errs = cols.map { c =>
+    // released on every exit: a throwing fit or the MASE guard must not
+    // leave the training frame cached for the life of the session
+    val errs = try cols.map { c =>
       val lr = new LinearRegression()
         .setSolver("normal").setRegParam(1e-6)
         .setFeaturesCol("features").setLabelCol(s"label_$c")
@@ -119,8 +121,7 @@ final class RegressionScorer(
         case _ => // mean_absolute_error
           scored.agg(avg(abs(p - y))).head().getDouble(0)
       }
-    }
-    trainVec.unpersist()
+    } finally trainVec.unpersist()
     errs.sum / errs.size
   }
 }

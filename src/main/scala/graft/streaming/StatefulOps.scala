@@ -154,6 +154,17 @@ object StatefulOps {
     }
   }
 
+  /** [[SessionCloseProcessor]] over `ds`, keyed by `itemId`, under
+    * processing-time timers.
+    *
+    * Batch-style callers: do NOT run it under `Trigger.AvailableNow`.
+    * With processing-time timers `transformWithState` asks for another
+    * (no-data) batch after every batch, so an AvailableNow query never
+    * terminates and `processAllAvailable` never returns. Run one batch per
+    * start instead — `Trigger.Once` over a persistent checkpoint, then a
+    * CHECKED `awaitTermination(timeoutMs)` (it returns false on timeout
+    * rather than throwing); each start fires the timers that expired
+    * since the last one (StatefulSpec's timer test is the pattern). */
   def sessionClose(ds: Dataset[Obs], gapMs: Long): Dataset[SessionClose] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_.itemId)

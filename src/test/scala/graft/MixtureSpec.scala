@@ -88,22 +88,6 @@ class MixtureSpec extends AnyFunSuite {
     assert(partial.size < viaFraction.size)
   }
 
-  test("materialize=false (declarative small-corpus posture) selects " +
-      "identical rows to the checkpointed default, both forms") {
-    val mat = rows(TextAnalysis.mixtureByTokenBudget(
-      docs, "doc_id", "lang", "text", 0.5, "42", 64))
-    val decl = rows(TextAnalysis.mixtureByTokenBudget(
-      docs, "doc_id", "lang", "text", 0.5, "42", 64,
-      materialize = false))
-    assert(decl == mat)
-    val matT = rows(TextAnalysis.mixtureByTemperature(
-      docs, "doc_id", "lang", "text", 0.5, 0.5, "42", 64))
-    val declT = rows(TextAnalysis.mixtureByTemperature(
-      docs, "doc_id", "lang", "text", 0.5, 0.5, "42", 64,
-      materialize = false))
-    assert(declT == matT)
-  }
-
   test("broadcastStatus=false (huge-group-cardinality posture) selects " +
       "identical rows via the shuffle join") {
     val viaBroadcast = rows(TextAnalysis.mixtureByTokenBudget(

@@ -109,6 +109,30 @@ class PipelineSpec extends AnyFunSuite {
     assert(a >= 0.0 && a.isFinite)
   }
 
+  test("TSTR RegressionScorer releases its cached training frame when " +
+      "scoring fails (MASE over a constant column)") {
+    import graft.pipeline.RegressionScorer
+    import org.apache.spark.sql.GraftCacheProbe.cachedEntries
+    // m2 constant: zero naive error, so MASE is undefined for it
+    val real = sampleData.withColumn("m2", lit(0.5))
+    val model = StatisticalProvider.fit(real, schema)
+    // the cache's in-memory buffers are the persistent RDDs Spark names
+    // (after the cached plan); unnamed ones — Ts.globalPosition's
+    // checkpoint — are freed by the ContextCleaner with their frame
+    def cacheBuffers = spark.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if rdd.name != null => id }.toSet
+    val entriesBefore = cachedEntries(spark)
+    val buffersBefore = cacheBuffers
+    val e = intercept[IllegalArgumentException](
+      new RegressionScorer(seqLen = 5, numSequences = 16, metric = "MASE")
+        .score(real, model, schema))
+    assert(e.getMessage.contains("MASE undefined"))
+    assert(cachedEntries(spark) == entriesBefore,
+      "the training frame stayed in the CacheManager")
+    val leaked = cacheBuffers -- buffersBefore
+    assert(leaked.isEmpty, s"cached buffers left behind: $leaked")
+  }
+
   test("provider registry rejects unknown providers (adapter.py:95-97)") {
     val e = intercept[IllegalArgumentException](GeneratorProvider.forName("nope"))
     assert(e.getMessage.contains("not supported"))

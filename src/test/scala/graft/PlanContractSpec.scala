@@ -143,9 +143,9 @@ class PlanContractSpec extends AnyFunSuite {
   }
 
   test("retrieval ranks via the bounded heap over the narrow vocab kernel") {
-    // bench posture (materialize=false): the corpus never becomes a full
-    // posting stream — ONE VocabTfs kernel projection per pass, static
-    // per-query scoring exploded map-side, the one-row stats attach as a
+    // the corpus never becomes a full posting stream — ONE VocabTfs
+    // kernel projection per pass, static per-query scoring exploded
+    // map-side, the one-row stats attach as a
     // BroadcastNestedLoopJoin (boundedLoop), TopK ranking, never a
     // per-query Window sort. The kernel must appear in PROJECTIONS only:
     // a Filter carrying it means PushPredicateThroughProject duplicated
@@ -163,19 +163,20 @@ class PlanContractSpec extends AnyFunSuite {
         s"$name evaluates the vocab kernel inside a Filter (duplicated " +
           s"per-row eval):\n$p")
     }
-    // corpus-scale posture (materialize=true, the default): the text is
-    // tokenized once into the checkpointed narrow frame and every
-    // consumer re-reads its blocks (Scan ExistingRDD)
+    // the public operator called with its defaults plans the same pure
+    // shape: no checkpointed RDD leaf a cloned repetition could re-read
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     import spark.implicits._
     val q = Seq((1L, "customer data")).toDF("query_id", "qtext")
     val scaled = graft.ext.Retrieval.bm25TopK(
       docs, "doc_id", "text", q, "query_id", "qtext", k = 5)
     val sp = scaled.queryExecution.executedPlan.toString
-    assert(sp.contains("Scan ExistingRDD"),
-      s"default bm25TopK no longer reads a materialized narrow frame:\n$sp")
+    assert(!sp.contains("Scan ExistingRDD"),
+      s"default bm25TopK grew a checkpoint back:\n$sp")
     assert(sp.contains("TopKPerGroup") && !sp.contains("Window"),
       s"default bm25TopK ranking shape regressed:\n$sp")
+    assert(!"Filter [^\\n]*vocabtfs".r.findFirstIn(sp).isDefined,
+      s"default bm25TopK evaluates the vocab kernel inside a Filter:\n$sp")
   }
 
   test("star joins broadcast their dimension sides") {
@@ -341,9 +342,9 @@ class PlanContractSpec extends AnyFunSuite {
 
   test("quality prune: bench posture is declarative (one kernel per " +
       "branch, no join); default posture scores the corpus exactly once") {
-    // bench query (materialize=false): fully declarative — the threshold
-    // branch and the filter branch each run ONE QualityStats kernel eval
-    // (two total, map-only), no checkpoint, and the one-row threshold
+    // bench query: fully declarative — the threshold branch and the
+    // filter branch each run ONE QualityStats kernel eval (two total,
+    // map-only), no checkpoint, and the one-row threshold
     // attaches via the in-plan broadcast (re-executed by every plan
     // clone, unlike a SubqueryExec-cached scalar subquery)
     val p = plans("text_quality_prune")
@@ -353,21 +354,18 @@ class PlanContractSpec extends AnyFunSuite {
       s"text_quality_prune bench posture grew a checkpoint back:\n$p")
     assert(p.contains("BroadcastNestedLoopJoin"),
       s"text_quality_prune lost its one-row threshold broadcast:\n$p")
-    // default posture (materialize=true, the corpus-scale choice): both
-    // consumers read the SAME lazily-checkpointed narrow score frame —
-    // the final plan scans a materialized RDD and contains NO scoring
-    // kernel; the text is scanned exactly once, inside the checkpointed
-    // lineage
+    // the public operator is the same one plan: no checkpointed RDD
+    // leaf, one kernel eval per branch, the one-row threshold broadcast
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val dp = graft.ext.TextAnalysis.pruneBottomQuantile(
         docs, "text", 0.25, Seq("doc_id", "lang"))
       .queryExecution.executedPlan.toString
-    assert(dp.contains("Scan ExistingRDD"),
-      s"default pruneBottomQuantile no longer reads a materialized score frame:\n$dp")
-    assert(!dp.toLowerCase.contains("qualitystats"),
-      s"default pruneBottomQuantile re-scores the corpus in its final plan:\n$dp")
-    assert(!dp.toLowerCase.contains("join"),
-      s"default pruneBottomQuantile grew a threshold join:\n$dp")
+    assert(!dp.contains("Scan ExistingRDD"),
+      s"default pruneBottomQuantile grew a checkpoint back:\n$dp")
+    assert("qualitystats".r.findAllIn(dp.toLowerCase).length == 2,
+      s"default pruneBottomQuantile kernel count changed (one per branch):\n$dp")
+    assert(dp.contains("BroadcastNestedLoopJoin"),
+      s"default pruneBottomQuantile lost its one-row threshold broadcast:\n$dp")
   }
 
   test("URL curation: blocklist anti-join broadcasts; host cap uses the bounded heap") {

@@ -5,10 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ext.TextAnalysis
 
-/** Quality-percentile pruning strategies (TextAnalysis.pruneBottomQuantile
-  * / pruneBottomQuantileKeep): value identity between the rescore and
-  * join text-retention strategies, consistency with the metadata-only
-  * prune, and each strategy's plan posture. */
+/** Quality-percentile pruning (TextAnalysis.pruneBottomQuantile /
+  * pruneBottomQuantileKeep / pruneBottomQuantilePerGroup): the
+  * text-retaining prune agrees with the metadata-only one, never shuffles
+  * the corpus, and the per-group prune matches a driver model. */
 class QualityPruneSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -17,40 +17,23 @@ class QualityPruneSpec extends AnyFunSuite {
     .parquet("/root/testdata/sf0.001/documents.parquet")
     .select("doc_id", "lang", "text")
 
-  test("rescore and join strategies keep identical rows, text included") {
-    val a = TextAnalysis.pruneBottomQuantileKeep(docs, "text", 0.25, "doc_id")
-      .orderBy("doc_id").as[(Long, String, String, Double)].collect().toSeq
-    val b = TextAnalysis.pruneBottomQuantileKeep(docs, "text", 0.25, "doc_id",
-      strategy = "join")
-      .orderBy("doc_id").as[(Long, String, String, Double)].collect().toSeq
-    assert(a == b)
-    assert(a.nonEmpty && a.size < docs.count())
-  }
-
   test("kept ids == the metadata-only prune's ids") {
-    val keep = TextAnalysis.pruneBottomQuantileKeep(docs, "text", 0.25, "doc_id")
-      .select("doc_id").as[Long].collect().toSet
+    val kept = TextAnalysis.pruneBottomQuantileKeep(docs, "text", 0.25)
+    // every original column rides through, the text untouched
+    assert(kept.columns.toSeq == docs.columns.toSeq :+ "quality_score")
+    assert(kept.join(docs.withColumnRenamed("text", "orig"), Seq("doc_id"))
+      .filter(col("text") =!= col("orig")).isEmpty)
+    val keep = kept.select("doc_id").as[Long].collect().toSet
     val meta = TextAnalysis.pruneBottomQuantile(docs, "text", 0.25,
       Seq("doc_id"))
       .select("doc_id").as[Long].collect().toSet
     assert(keep == meta)
-  }
-
-  test("materialize=false (declarative bench posture) == materialize=true " +
-      "(checkpointed), row for row") {
-    val a = TextAnalysis.pruneBottomQuantile(docs, "text", 0.25,
-        Seq("doc_id", "lang"))
-      .orderBy("doc_id").as[(Long, String, Double)].collect().toSeq
-    val b = TextAnalysis.pruneBottomQuantile(docs, "text", 0.25,
-        Seq("doc_id", "lang"), materialize = false)
-      .orderBy("doc_id").as[(Long, String, Double)].collect().toSeq
-    assert(a == b)
-    assert(a.nonEmpty)
+    assert(keep.nonEmpty && keep.size < docs.count())
   }
 
   test("rescore strategy: the corpus never shuffles (no Exchange outside " +
       "the threshold subquery)") {
-    val df = TextAnalysis.pruneBottomQuantileKeep(docs, "text", 0.25, "doc_id")
+    val df = TextAnalysis.pruneBottomQuantileKeep(docs, "text", 0.25)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     // the main tree is scan -> score -> filter; the threshold subquery
@@ -63,28 +46,6 @@ class QualityPruneSpec extends AnyFunSuite {
       s"rescore strategy leaked a corpus shuffle:\n$plan")
     assert(plan.contains("Subquery subquery"),
       s"rescore threshold is no longer a scalar subquery:\n$plan")
-  }
-
-  test("join strategy: one scoring pass (the checkpointed frame), none in " +
-      "the final plan") {
-    val df = TextAnalysis.pruneBottomQuantileKeep(docs, "text", 0.25, "doc_id",
-      strategy = "join")
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    // scoring lives once inside the checkpointed lineage: the final plan
-    // joins the corpus to a materialized RDD and contains no scoring
-    // expression
-    assert(!plan.contains("regexp_count"),
-      s"join strategy re-scores the corpus:\n$plan")
-    assert(plan.contains("Scan ExistingRDD"),
-      s"join strategy lost its materialized score frame:\n$plan")
-  }
-
-  test("unknown strategy is rejected") {
-    val e = intercept[IllegalArgumentException](
-      TextAnalysis.pruneBottomQuantileKeep(docs, "text", 0.25, "doc_id",
-        strategy = "bloom"))
-    assert(e.getMessage.contains("rescore"))
   }
 
   test("per-group prune == per-group driver model; single group == " +

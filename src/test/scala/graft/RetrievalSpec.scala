@@ -59,16 +59,6 @@ class RetrievalSpec extends AnyFunSuite {
     assert(got.map(_._4) == Seq(1, 2, 3, 1)) // ranks dense from 1 per query
   }
 
-  test("bm25TopK materialize=false reproduces the checkpointed default exactly") {
-    val q = Seq((10, "banana date"), (20, "apple")).toDF("qid", "qtext")
-    def run(m: Boolean) = Retrieval.bm25TopK(
-        corpus, "doc_id", "text", q, "qid", "qtext", k = 10,
-        roundScoreTo = 6, materialize = m)
-      .orderBy(col("qid"), col("rank"))
-      .as[(Int, Long, Double, Int)].collect().toSeq
-    assert(run(false) == run(true))
-  }
-
   test("bm25TopK >256-term batch (distributed-df fallback) == the fused path") {
     // the query below pads the real terms with 300 distinct OOV tokens,
     // pushing the vocabulary over MaxFusedVocab — results must be
