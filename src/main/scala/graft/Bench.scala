@@ -60,7 +60,9 @@ object Bench {
     * (median of `SPARK_GRAFT_BENCH_REPS`), a batched sub-floor posture
     * and, unless `SPARK_GRAFT_AQE_BLOCK=false`, an AQE-on block — and
     * prints the full JSON line (also written to `SPARK_GRAFT_BENCH_OUT`,
-    * default BENCH_LOCAL.json) followed by a compact totals line. */
+    * default BENCH_LOCAL.json, or target/BENCH_LOCAL.subset.json when
+    * `SPARK_GRAFT_ONLY` names a subset) followed by a compact totals
+    * line. Exits 1 after the compact line when the file write failed. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val only = Harness.selected()
@@ -379,12 +381,19 @@ object Bench {
     println(line)
     // also land the result as a file: the driver's log tail truncates long
     // lines, which made BENCH_r02.json unparseable mid-JSON
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
-    try {
-      java.nio.file.Files.write(java.nio.file.Paths.get(out),
-        (line + "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable =>
+    // a subset run keeps off the full-registry record
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      if (sys.env.get("SPARK_GRAFT_ONLY").exists(_.trim.nonEmpty))
+        "target/BENCH_LOCAL.subset.json"
+      else "BENCH_LOCAL.json")
+    val written = try {
+      val path = java.nio.file.Paths.get(out).toAbsolutePath
+      java.nio.file.Files.createDirectories(path.getParent)
+      java.nio.file.Files.write(path, (line + "\n").getBytes("UTF-8"))
+      true
+    } catch { case e: Exception =>
       System.err.println(s"[bench] could not write $out: ${e.getMessage}")
+      false
     }
     // driver-parse contract (round-19 verdict ask 2): the full line above
     // is ~20 KB (181 per-query entries ×4 maps) and the harness that runs
@@ -406,5 +415,6 @@ object Bench {
           s""","total_aqe":${c3(totalAqe)}""") +
         s""","sf":"$sfDir"}""")
     spark.stop()
+    if (!written) sys.exit(1)
   }
 }

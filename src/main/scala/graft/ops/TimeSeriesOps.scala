@@ -162,7 +162,18 @@ object TimeSeriesOps {
       df: DataFrame,
       idCol: String,
       posCol: String,
-      outCol: String = "global_pos"): DataFrame = {
+      outCol: String = "global_pos"): DataFrame =
+    globalPositionWithCount(df, idCol, posCol, outCol)._1
+
+  /** [[globalPosition]] plus the row count of `df`: the sum of the
+    * per-partition totals the prefix sum already collects, so a caller
+    * that needs both (a positional split's `n`) runs no separate count.
+    */
+  def globalPositionWithCount(
+      df: DataFrame,
+      idCol: String,
+      posCol: String,
+      outCol: String = "global_pos"): (DataFrame, Long) = {
     val spark = df.sparkSession
     val nPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val counts = df.groupBy(col(idCol)).agg(count(lit(1)).as("__n"))
@@ -180,7 +191,7 @@ object TimeSeriesOps {
     // per-partition totals: the ONLY driver materialization, bounded by
     // the partition count
     val totals = ranged.groupBy(col("__pid")).agg(sum(col("__n")).as("__t"))
-      .orderBy(col("__pid")).collect()
+      .collect().sortBy(_.getInt(0))
     var acc = 0L
     val partOffset: Map[Int, Long] = totals.map { r =>
       val e = r.getInt(0) -> acc
@@ -200,9 +211,10 @@ object TimeSeriesOps {
     // null-safe equality: entities with a null id keep their offset row
     // (a plain using-column join would silently drop them). No broadcast
     // hint: the offsets side is entity-dimension-sized.
-    df.join(offsets, df(idCol) <=> col("__gpk"))
+    val positioned = df.join(offsets, df(idCol) <=> col("__gpk"))
       .withColumn(outCol, col("__offset") + col(posCol))
       .drop("__gpk", "__offset")
+    (positioned, acc)
   }
 
   /** W5 — positional train/val/test split (reference:
@@ -211,16 +223,17 @@ object TimeSeriesOps {
     * integer truncation exactly as numpy/python int() (SURVEY.md §4.3
     * trap 4). `posCol` must be a dense 0-based position; passing a
     * pre-existing dense id (e.g. a monotone source key) avoids the global
-    * row_number shuffle entirely.
+    * row_number shuffle entirely. `n` is a scalar subquery of the plan,
+    * so building the split runs no job.
     */
   def trainValTestSplit(
       df: DataFrame,
       posCol: String,
       trainFrac: Double = 0.75,
       outCol: String = "split"): DataFrame = {
-    val n = df.count()
-    val t = (trainFrac * n).toLong
-    val v = t + ((n - t) / 2)
+    val n = df.agg(count(lit(1))).scalar()
+    val t = (lit(trainFrac) * n).cast("bigint")
+    val v = t + ((n - t) / 2).cast("bigint")
     df.withColumn(
       outCol,
       when(col(posCol) < t, "train")

@@ -69,8 +69,7 @@ final class PredictiveScorer(seqLen: Int = 8) extends Scorer {
     val stats = Scaling.fit(real, schema.numericCols)
     val scaled = stats.transform(real)
     val win = Ts.slidingWindows(scaled, id, schema.tsCol, schema.numericCols, seqLen)
-    val xy = Ts.globalPosition(Ts.xySplit(win), id, "__pos", "__seq")
-    val n = xy.count()
+    val (xy, n) = Ts.globalPositionWithCount(Ts.xySplit(win), id, "__pos", "__seq")
     val t = (0.75 * n).toLong
     val v = t + ((n - t) / 2)
     val test = xy.filter(col("__seq") >= v)

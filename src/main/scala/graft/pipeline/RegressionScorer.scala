@@ -1,8 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.ml.feature.VectorAssembler
-import org.apache.spark.ml.regression.LinearRegression
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.TsSchema
@@ -14,11 +12,17 @@ import graft.providers.FittedGenerator
   * x/y split (W4) → **train a regressor on windows generated by the fitted
   * model** → evaluate MAE on the REAL test split (W5 75/12.5/12.5).
   *
-  * The regressor is MLlib `LinearRegression` with the normal-equations
-  * solver — a deterministic closed-form fit (the reference's Keras LSTM is
-  * stochastic and mocked in its own tests; determinism is the parity
-  * requirement, SURVEY §7.4 item 5). One model per measurement column,
-  * features = the flattened x window.
+  * The regressor is ridge-regularized least squares solved in closed form
+  * from the normal equations — a deterministic fit (the reference's Keras
+  * LSTM is stochastic and mocked in its own tests; determinism is the
+  * parity requirement, SURVEY §7.4 item 5). One model per measurement
+  * column, features = the flattened x window. Every column's fit comes
+  * from ONE aggregate over the synthetic windows (count, Σa, Σaaᵀ, and
+  * Σb, Σb², Σab per label) and a driver-side solve with the arithmetic of
+  * MLlib's `WeightedLeastSquares` normal solver (see
+  * [[RegressionScorer.fitNormal]]); every column's test error comes from
+  * one more aggregate over the real test split. MLlib's `LinearRegression`
+  * stays in the test tree as the oracle for both.
   */
 final class RegressionScorer(
     seqLen: Int = 8,
@@ -40,6 +44,9 @@ final class RegressionScorer(
 
   val metricKey = metric
 
+  private def featureNames(cols: Seq[String]): Seq[String] =
+    (0 until seqLen - 1).flatMap(i => cols.map(c => s"f_${c}_$i"))
+
   /** Flatten windowed x/y into per-feature learning columns. */
   private def flatten(xy: DataFrame, cols: Seq[String]): DataFrame = {
     val featCols = (0 until seqLen - 1).flatMap(i =>
@@ -56,12 +63,14 @@ final class RegressionScorer(
     val stats = Scaling.fit(real, cols)
 
     // real windows -> positional test split (W5), exact int truncation;
-    // globalPosition avoids the single-partition row_number sort
-    val realXy = Ts.globalPosition(
+    // globalPosition avoids the single-partition row_number sort, and
+    // its partition totals give n without a separate count
+    val (realXy, n) = Ts.globalPositionWithCount(
       Ts.xySplit(Ts.slidingWindows(
         stats.transform(real), id, schema.tsCol, cols, seqLen)),
       id, "__pos", "__seq")
-    val n = realXy.count()
+    require(n > 0, s"TSTR real test split is empty: the real series " +
+      s"has no window of $seqLen steps")
     val t = (0.75 * n).toLong
     val v = t + ((n - t) / 2)
     val realTest = flatten(realXy.filter(col("__seq") >= v), cols)
@@ -71,18 +80,14 @@ final class RegressionScorer(
     // values into the same scaled space the real test split lives in
     val synth = stats.transform(model.generate(spark, numSequences, seqLen * 2))
     val synthXy = Ts.xySplit(Ts.slidingWindows(synth, "seq_id", "step", cols, seqLen))
-    val train = flatten(synthXy, cols)
-
-    val features = (0 until seqLen - 1).flatMap(i => cols.map(c => s"f_${c}_$i")).toArray
-    val assembler = new VectorAssembler()
-      .setInputCols(features).setOutputCol("features")
-    val trainVec = assembler.transform(train).cache()
-    val testVec = assembler.transform(realTest)
+    val features = featureNames(cols)
+    val labels = cols.map(c => s"label_$c")
+    val fits = RegressionScorer.fitNormal(flatten(synthXy, cols), features, labels)
 
     // MASE denominator: per-column mean 1-step naive error of the REAL
     // scaled series, lag within entity (one window pass over the narrow
     // scaled frame; only computed when the metric asks for it)
-    lazy val naiveScale: Map[String, Double] = {
+    val naiveScale: Map[String, Double] = if (metric != "MASE") Map.empty else {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col(id)).orderBy(col(schema.tsCol))
       val lagged = cols.foldLeft(stats.transform(real))((d, c) =>
@@ -91,37 +96,168 @@ final class RegressionScorer(
         avg(abs(col(c) - col(s"__lag_$c"))).as(s"s_$c"))
       val row = lagged.agg(aggs.head, aggs.tail: _*).head()
       cols.zipWithIndex.map { case (c, i) =>
-        c -> (if (row.isNullAt(i)) 0.0 else row.getDouble(i))
+        val s = if (row.isNullAt(i)) 0.0 else row.getDouble(i)
+        require(s > 0, s"MASE undefined: column '$c' of the real " +
+          "series is constant (zero naive error)")
+        c -> s
       }.toMap
     }
 
-    // released on every exit: a throwing fit or the MASE guard must not
-    // leave the training frame cached for the life of the session
-    val errs = try cols.map { c =>
-      val lr = new LinearRegression()
-        .setSolver("normal").setRegParam(1e-6)
-        .setFeaturesCol("features").setLabelCol(s"label_$c")
-        .setPredictionCol(s"pred_$c")
-      val fitted = lr.fit(trainVec)
-      val scored = fitted.transform(testVec)
-      val p = col(s"pred_$c")
-      val y = col(s"label_$c")
+    // every column's test error in one aggregate; a prediction is a
+    // column expression over the flattened window, dot product first
+    // (as MLlib's model predicts), then the intercept
+    val errs = cols.zip(labels).zip(fits).map { case ((c, label), fit) =>
+      val p = (fit.coefficients.toSeq.zip(features).map { case (b, f) =>
+        lit(b) * col(f) } :+ lit(fit.intercept)).reduce(_ + _)
+      val y = col(label)
       metric match {
-        case "RMSE" =>
-          scored.agg(sqrt(avg(pow(p - y, 2)))).head().getDouble(0)
-        case "sMAPE" =>
-          scored.agg(avg(graft.metrics.Metrics.smapeTerm(p, y)))
-            .head().getDouble(0)
-        case "MASE" =>
-          val mae = scored.agg(avg(abs(p - y))).head().getDouble(0)
-          val s = naiveScale(c)
-          require(s > 0, s"MASE undefined: column '$c' of the real " +
-            "series is constant (zero naive error)")
-          mae / s
-        case _ => // mean_absolute_error
-          scored.agg(avg(abs(p - y))).head().getDouble(0)
+        case "RMSE" => sqrt(avg(pow(p - y, 2)))
+        case "sMAPE" => avg(graft.metrics.Metrics.smapeTerm(p, y))
+        case "MASE" => avg(abs(p - y)) / lit(naiveScale(c))
+        case _ => avg(abs(p - y)) // mean_absolute_error
       }
-    } finally trainVec.unpersist()
-    errs.sum / errs.size
+    }
+    val row = realTest.agg(RegressionScorer.incomplete(features ++ labels), errs: _*).head()
+    require(row.getLong(0) == 0,
+      s"TSTR real test split holds ${row.getLong(0)} windows with nulls")
+    (1 to cols.size).map(row.getDouble).sum / cols.size
+  }
+}
+
+object RegressionScorer {
+
+  /** The ridge penalty of the TSTR regressor (MLlib's `regParam`). */
+  val RegParam = 1e-6
+
+  /** One label's fit in the original (unstandardized) feature space. */
+  final case class LinearFit(coefficients: Array[Double], intercept: Double)
+
+  /** Rows of the frame where any of `names` is null. */
+  private[pipeline] def incomplete(names: Seq[String]): Column =
+    count_if(!names.map(c => col(c).isNotNull).reduce(_ && _))
+
+  /** Least squares of every `labels` column on the `features` columns of
+    * `train`, with an intercept, standardized features and label, and an
+    * L2 penalty [[RegParam]] — the problem MLlib's `LinearRegression`
+    * solves with `solver = "normal"`.
+    *
+    * One aggregate (a plain `Dataset.agg`: partial and final aggregation,
+    * no RDD, no cache) yields the count, Σa, the packed upper triangle of
+    * Σaaᵀ, and Σb, Σb² and Σab for every label. Each label is then
+    * solved on the driver as `WeightedLeastSquares` does with unit
+    * weights: population standard deviations, standardized moments (zero
+    * for a constant feature), `RegParam / bStd` on the standardized
+    * diagonal, the intercept as an augmented row, a Cholesky solve and a
+    * rescale. A constant label (`bStd == 0`) fits zero coefficients and
+    * its mean as intercept. The penalty keeps the augmented matrix
+    * positive definite, so the Cholesky factorization always exists.
+    */
+  def fitNormal(
+      train: DataFrame,
+      features: Seq[String],
+      labels: Seq[String]): Seq[LinearFit] = {
+    val k = features.size
+    val a = features.map(col)
+    // column-major packed upper triangle: (0,0), (0,1), (1,1), (0,2), ...
+    val packed = for (j <- 0 until k; i <- 0 to j) yield sum(a(i) * a(j))
+    val perLabel = labels.flatMap { l =>
+      val b = col(l)
+      Seq(sum(b), sum(b * b)) ++ a.map(x => sum(x * b))
+    }
+    val aggs = Seq(count(lit(1)), incomplete(features ++ labels)) ++
+      a.map(sum) ++ packed ++ perLabel
+    val row = train.agg(aggs.head, aggs.tail: _*).head()
+    val n = row.getLong(0)
+    require(n > 0, "TSTR training set is empty: no synthetic window to fit")
+    require(row.getLong(1) == 0,
+      s"TSTR training set holds ${row.getLong(1)} windows with nulls")
+    def sums(from: Int, len: Int) = Array.tabulate(len)(i => row.getDouble(from + i))
+    val aSum = sums(2, k)
+    val aaSum = sums(2 + k, packed.size)
+    val labelFrom = 2 + k + packed.size
+    labels.indices.map { li =>
+      val at = labelFrom + li * (k + 2)
+      solve(n, aSum, aaSum, row.getDouble(at), row.getDouble(at + 1),
+        sums(at + 2, k))
+    }
+  }
+
+  /** The normal-equations solve of one label from its sufficient
+    * statistics (`aaSum` packed as in [[fitNormal]]). */
+  private def solve(
+      n: Long,
+      aSum: Array[Double],
+      aaSum: Array[Double],
+      bSum: Double,
+      bbSum: Double,
+      abSum: Array[Double]): LinearFit = {
+    val k = aSum.length
+    val w = n.toDouble
+    val rawBBar = bSum / w
+    val bStd = math.sqrt(math.max(bbSum / w - rawBBar * rawBBar, 0.0))
+    if (bStd == 0.0) LinearFit(Array.fill(k)(0.0), rawBBar) else {
+      def diag(i: Int) = i * (i + 3) / 2 // packed index of (i, i)
+      val aStd = Array.tabulate(k) { i =>
+        val m = aSum(i) / w
+        math.sqrt(math.max(aaSum(diag(i)) / w - m * m, 0.0))
+      }
+      def standardized(v: Double, scale: Double) =
+        if (scale == 0.0) 0.0 else v / w / scale
+      // augmented (k+1)×(k+1) system: standardized E[aaᵀ] + λI, bordered by
+      // the standardized feature means and a 1 (the intercept's row)
+      val m = k + 1
+      val lhs = Array.ofDim[Double](m, m)
+      var p = 0
+      for (j <- 0 until k; i <- 0 to j) {
+        val e = standardized(aaSum(p), aStd(i) * aStd(j))
+        lhs(i)(j) = e
+        lhs(j)(i) = e
+        p += 1
+      }
+      val lambda = RegParam / bStd
+      for (i <- 0 until k) {
+        lhs(i)(i) += lambda
+        lhs(i)(k) = standardized(aSum(i), aStd(i))
+        lhs(k)(i) = lhs(i)(k)
+      }
+      lhs(k)(k) = 1.0
+      val rhs = Array.tabulate(m) { i =>
+        if (i < k) standardized(abSum(i), aStd(i) * bStd) else rawBBar / bStd
+      }
+      val x = choleskySolve(lhs, rhs)
+      LinearFit(
+        Array.tabulate(k)(i => if (aStd(i) == 0.0) 0.0 else x(i) * bStd / aStd(i)),
+        x(k) * bStd)
+    }
+  }
+
+  /** Solves `a · x = b` for symmetric positive definite `a` (L·Lᵀ). */
+  private def choleskySolve(a: Array[Array[Double]], b: Array[Double]): Array[Double] = {
+    val m = b.length
+    val l = Array.ofDim[Double](m, m)
+    for (j <- 0 until m) {
+      var d = a(j)(j)
+      for (q <- 0 until j) d -= l(j)(q) * l(j)(q)
+      require(d > 0, "normal equations are not positive definite")
+      l(j)(j) = math.sqrt(d)
+      for (i <- j + 1 until m) {
+        var s = a(i)(j)
+        for (q <- 0 until j) s -= l(i)(q) * l(j)(q)
+        l(i)(j) = s / l(j)(j)
+      }
+    }
+    val z = new Array[Double](m)
+    for (i <- 0 until m) {
+      var s = b(i)
+      for (q <- 0 until i) s -= l(i)(q) * z(q)
+      z(i) = s / l(i)(i)
+    }
+    val x = new Array[Double](m)
+    for (i <- m - 1 to 0 by -1) {
+      var s = z(i)
+      for (q <- i + 1 until m) s -= l(q)(i) * x(q)
+      x(i) = s / l(i)(i)
+    }
+    x
   }
 }

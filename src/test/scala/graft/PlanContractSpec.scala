@@ -454,6 +454,14 @@ class PlanContractSpec extends AnyFunSuite {
     assert(SparkEntry.queries("q1_agg")(fresh, dir) eq built)
   }
 
+  test("w5_split counts its rows inside the plan: memoized after one build") {
+    val fresh = spark.newSession()
+    assert(!SparkEntry.memoized(fresh, "w5_split", dir))
+    SparkEntry.queries("w5_split")(fresh, dir)
+    assert(SparkEntry.memoized(fresh, "w5_split", dir),
+      "w5_split ran SQL at construction")
+  }
+
   test("queries that run SQL at construction or plan over RDD leaves are " +
       "never memoized") {
     // lazy-localCheckpoint RDD leaves (the n-gram posting counts),
