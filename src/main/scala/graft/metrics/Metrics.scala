@@ -1,5 +1,7 @@
 package graft.metrics
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,13 +43,32 @@ object Metrics {
         count(lit(1)).as("iterations"))
 
   /** A11 — best generator = argmin of the average metric
-    * (paqarin/evaluation.py:122-123). */
+    * (paqarin/evaluation.py:122-123) over the rows of `metricKey`, which
+    * are bounded by generators × iterations: [[argminMean]] on the driver
+    * over the collected rows. */
   def bestGenerator(metrics: DataFrame, metricKey: String): Option[String] =
-    summary(metrics)
+    argminMean(metrics
       .filter(col("metric_key") === metricKey)
-      .orderBy(col("avg_value"), col("generator_name"))
-      .select(col("generator_name"))
-      .head(1).headOption.map(_.getString(0))
+      .select(col("generator_name"), col("iteration"), col("value"))
+      .collect().toSeq
+      .map(r => (r.getString(0), r.getInt(1), r.getDouble(2))))
+
+  /** A11 on the driver over `(generator, iteration, value)` scores, in the
+    * order of `orderBy(avg(value), generator_name)`: each mean sums its
+    * values in iteration order, the smallest mean wins, NaN ranks last,
+    * `-0.0 == 0.0`, and a tie goes to the smaller name (UTF-8 byte
+    * order, Spark's string order). */
+  def argminMean(scores: Seq[(String, Int, Double)]): Option[String] = {
+    def compare(a: (String, Double), b: (String, Double)): Int = {
+      val byMean = if (a._2 == b._2) 0 else java.lang.Double.compare(a._2, b._2)
+      if (byMean != 0) byMean
+      else java.util.Arrays.compareUnsigned(a._1.getBytes(UTF_8), b._1.getBytes(UTF_8))
+    }
+    scores.groupBy(_._1).toSeq
+      .map { case (g, s) => (g, s.sortBy(_._2).foldLeft(0.0)(_ + _._3) / s.size) }
+      .reduceOption((a, b) => if (compare(b, a) < 0) b else a)
+      .map(_._1)
+  }
 
   /** A9 — mean absolute error between two value columns after an equi-join
     * on `keyCols` (sklearn mean_absolute_error over all cells,

@@ -66,10 +66,11 @@ object TimeSeriesOps {
   /** J2 + P6 — calendar reindex with zero fill (reference: pandas
     * `reindex(date_range(...))` + `fillna`, paqarin/utils/data_utils.py:44-84).
     *
-    * Generates the global [min, max] daily calendar with
-    * `sequence(...interval...)` (no driver-side loop), cross-joins it with
-    * the distinct entity set (both sides tiny → broadcastable), and
-    * left-joins the observed buckets, filling gaps with `fillValue`.
+    * Generates the global [min, max] calendar, stepping by `step` (one day
+    * by default), with `sequence(...interval...)` (no driver-side loop),
+    * cross-joins it with the distinct entity set (both sides tiny →
+    * broadcastable), and left-joins the observed buckets, filling gaps with
+    * `fillValue`.
     * The fact-side join key is (id, bucket), so the only shuffle is the one
     * Catalyst picks for the left join; at scale the calendar×ids grid stays
     * broadcast.
@@ -333,6 +334,15 @@ object TimeSeriesOps {
     * (sequences, length) metadata. The reference loops per entity and
     * concatenates (U1); here the union is implicit — everything is one
     * plan with a single aggregation shuffle plus a broadcast calendar join.
+    * The calendar steps by one `unit` ([[unitStep]]).
+    *
+    * The metadata is one aggregate over the input rows, not a pass over
+    * the filled plan: the surrogate-key join keeps the rows whose id
+    * columns are all non-null, the filled grid is those ids × the calendar
+    * `[lo, hi]` (an id whose every timestamp is null still sits on it;
+    * a null bucket never does), and `date_trunc` is monotone, so the
+    * calendar's bounds are the min and max truncated timestamp. The
+    * returned frame stays lazy.
     */
   def normaliseSequences(
       df: DataFrame,
@@ -341,16 +351,35 @@ object TimeSeriesOps {
       valueCols: Seq[String],
       orderCol: String,
       unit: String = "day"): NormalisedSequences = {
+    val step = unitStep(unit)
     val keyed = addSurrogateKey(df, idCols, orderCol)
     val daily = resampleSum(keyed, "surrogate_item_id", tsCol, valueCols, unit)
-    val filled = calendarFill(daily, "surrogate_item_id", "bucket", valueCols)
-    // both counts in ONE job over the resample-and-fill plan; a null
-    // counts as one value, as it does for distinct().count()
-    def distinctCount(c: Column): Column = count_distinct(c) +
-      coalesce(max(when(c.isNull, 1L).otherwise(0L)), lit(0L))
-    val counts = filled.agg(distinctCount(col("bucket")),
-      distinctCount(col("surrogate_item_id"))).head()
-    NormalisedSequences(filled, counts.getLong(1), counts.getLong(0))
+    val filled = calendarFill(daily, "surrogate_item_id", "bucket", valueCols, step = step)
+    val bucket = date_trunc(unit, col(tsCol))
+    val meta = df
+      .filter(idCols.map(col(_).isNotNull).reduce(_ && _))
+      .agg(count_distinct(col(idCols.head), idCols.tail.map(col): _*).as("ids"),
+        min(bucket).as("lo"), max(bucket).as("hi"))
+      .select(col("ids"), when(col("lo").isNull, 0)
+        .otherwise(size(sequence(col("lo"), col("hi"), expr(step)))))
+      .head()
+    val (ids, len) = (meta.getLong(0), meta.getInt(1).toLong)
+    // the grid is ids × calendar: empty when either side is
+    if (ids == 0 || len == 0) NormalisedSequences(filled, 0L, 0L)
+    else NormalisedSequences(filled, ids, len)
+  }
+
+  /** The [[calendarFill]] step for a `date_trunc` unit: one unit, three
+    * months for "quarter". */
+  def unitStep(unit: String): String = unit.toLowerCase(java.util.Locale.ROOT) match {
+    case "year" | "yyyy" | "yy" => "interval 1 year"
+    case "quarter" => "interval 3 months"
+    case "month" | "mon" | "mm" => "interval 1 month"
+    case "week" => "interval 1 week"
+    case "day" | "dd" => "interval 1 day"
+    case u @ ("hour" | "minute" | "second" | "millisecond" | "microsecond") =>
+      s"interval 1 $u"
+    case _ => throw new IllegalArgumentException(s"unknown date_trunc unit: $unit")
   }
 
   /** A12 (adapted) — frequency inference per entity as the median

@@ -23,6 +23,7 @@ final class EvaluationPipeline(
   def fit(data: DataFrame, schema: TsSchema): EvaluationResult = {
     val spark = data.sparkSession
     var metrics = Metrics.empty(spark)
+    val scores = scala.collection.mutable.ArrayBuffer[(String, Int, Double)]()
     val fitted = scala.collection.mutable.Map[String, FittedGenerator]()
     generators.foreach { case (genName, provider) =>
       val model = provider.fit(data, schema) // §3.1 fit_generator
@@ -31,10 +32,12 @@ final class EvaluationPipeline(
       (0 until iterations).foreach { it =>
         val score = scorer.score(data, model, schema)
         metrics = Metrics.record(metrics, genName, it, scorer.metricKey, score)
+        scores += ((genName, it, score))
       }
     }
-    val best = Metrics.bestGenerator(metrics, scorer.metricKey)
-    EvaluationResult(Metrics.summary(metrics), metrics, best, fitted.toMap)
+    // the scores are already on the driver: no Spark query for A11
+    EvaluationResult(Metrics.summary(metrics), metrics,
+      Metrics.argminMean(scores.toSeq), fitted.toMap)
   }
 }
 

@@ -38,6 +38,67 @@ class PipelineSpec extends AnyFunSuite {
     assert(Metrics.bestGenerator(m, "mae").contains("better"))
   }
 
+  test("A11 driver argmin agrees with bestGenerator and the orderBy oracle") {
+    def oracle(m: org.apache.spark.sql.DataFrame, key: String): Option[String] =
+      Metrics.summary(m).filter(col("metric_key") === key)
+        .orderBy(col("avg_value"), col("generator_name")).limit(1)
+        .select(col("generator_name")).as[String].collect().headOption
+    val rnd = new scala.util.Random(17)
+    val tiny = -Double.MinPositiveValue // its mean over 3 rounds to -0.0
+    val tables: Seq[Seq[(String, Int, Double)]] = Seq(
+      Seq(("b", 0, 1.0), ("a", 0, 1.0)), // tie: the smaller name
+      Seq(("a", 0, Double.NaN), ("b", 0, 7.0)), // NaN ranks last
+      Seq(("b", 0, Double.NaN), ("a", 0, Double.NaN)),
+      Seq(("b", 0, tiny), ("b", 1, 0.0), ("b", 2, 0.0), ("a", 0, 0.0)), // -0.0 == 0.0
+      Seq(("a", 0, 0.0), ("b", 0, -1.0), ("b", 1, 1.0)),
+      Seq(("x", 0, 1.0), ("x", 1, 3.0), ("w", 0, 2.0), ("w", 1, 2.0)), // mean tie
+      Seq(("z", 0, 5.0), ("y", 0, 4.0), ("y", 1, Double.NaN), ("z", 1, 1.0)),
+      (0 until 3).flatMap(it => Seq("g3", "g1", "g2", "g0")
+        .map(g => (g, it, rnd.nextDouble()))),
+      Seq.empty)
+    for (t <- tables) {
+      // a second key's rows must not count
+      val rows = t.map { case (g, i, v) => (g, i, "mae", v) } ++
+        t.map { case (g, i, _) => (g, i, "other", -100.0 * i) }
+      val m = rows.toDF(Metrics.Schema: _*)
+      val want = oracle(m, "mae")
+      assert(Metrics.argminMean(t) == want, t)
+      assert(Metrics.bestGenerator(m, "mae") == want, t)
+    }
+    assert(Metrics.argminMean(tables(3)).contains("a"))
+    assert(Metrics.argminMean(tables(6)).contains("z"))
+  }
+
+  test("EvaluationPipeline.fit starts no SQL execution to pick the best generator") {
+    import graft.internal.SqlExecutionProbe
+    import graft.pipeline.Scorer
+    import graft.providers.FittedGenerator
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    val stub = new GeneratorProvider {
+      val name = "stub"
+      def fit(data: DataFrame, schema: TsSchema): FittedGenerator = new FittedGenerator {
+        def generate(spark: SparkSession, n: Int, seqLen: Int): DataFrame = data
+      }
+    }
+    val values = Iterator(3.0, 1.0, 2.0, 1.5, 0.5, 4.0)
+    var calls = 0
+    val counting = new Scorer {
+      val metricKey = "mae"
+      def score(real: DataFrame, model: FittedGenerator, schema: TsSchema): Double = {
+        calls += 1
+        values.next()
+      }
+    }
+    val pipeline = new EvaluationPipeline(
+      scala.collection.immutable.ListMap("p" -> stub, "q" -> stub, "r" -> stub),
+      counting, iterations = 2)
+    val (result, executions) = SqlExecutionProbe.count(spark)(pipeline.fit(sampleData, schema))
+    assert(calls == 6)
+    assert(executions == 0) // neither the scorer nor the provider runs one
+    assert(result.bestGenerator.contains("q")) // means p 2.0, q 1.75, r 2.25
+    assert(Metrics.bestGenerator(result.metrics, "mae") == result.bestGenerator)
+  }
+
   test("StatisticalProvider generates n x seqLen deterministic rows") {
     val model = StatisticalProvider.fit(sampleData, schema)
     val g1 = model.generate(spark, 4, 6)

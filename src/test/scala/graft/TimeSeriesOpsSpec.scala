@@ -145,6 +145,77 @@ class TimeSeriesOpsSpec extends AnyFunSuite {
     assert(got == Seq(30.0, 0.0, 0.0, 70.0))
   }
 
+  test("normalise_sequences resamples and fills in its unit: hourly keeps every bucket") {
+    val df = Seq(
+      ("a", "2024-01-01 00:10:00", 1.0, 0L), ("a", "2024-01-01 01:10:00", 2.0, 1L),
+      ("b", "2024-01-01 05:10:00", 3.0, 2L), ("b", "2024-01-02 03:00:00", 4.0, 3L))
+      .toDF("item_id", "s", "v", "src")
+      .withColumn("ts", to_timestamp(col("s")))
+    val res = TimeSeriesOps.normaliseSequences(
+      df, Seq("item_id"), "ts", Seq("v"), "src", unit = "hour")
+    assert(res.numSequences == 2 && res.seqLen == 28) // 00:00 Jan 1 .. 03:00 Jan 2
+    assert(res.df.count() == 56)
+    assert(res.df.agg(sum(col("v"))).as[Double].head() == 10.0)
+  }
+
+  /** Seeded rows over two nullable id columns, about 40 days from
+    * 2024-01-30 (crossing two month ends), a `nullTs` share of null
+    * timestamps, and optionally an id whose every timestamp is null. */
+  private def metaInput(seed: Int, n: Int, nullTs: Double, ghost: Boolean) = {
+    val rnd = new scala.util.Random(seed)
+    val base = Timestamp.valueOf("2024-01-30 00:00:00").getTime
+    val rows = (0 until n).map { i =>
+      val a = if (rnd.nextDouble() < 0.1) None else Some(s"a${rnd.nextInt(3)}")
+      val b = if (rnd.nextDouble() < 0.1) None else Some(rnd.nextInt(2))
+      val ts = if (rnd.nextDouble() < nullTs) None
+        else Some(new Timestamp(base + (rnd.nextDouble() * 40 * 86400000L).toLong))
+      (a, b, ts, i.toLong, rnd.nextDouble())
+    } ++ (if (ghost) Seq((Some("ghost"), Some(9), None, n.toLong, 1.0)) else Nil)
+    rows.toDF("a", "b", "ts", "ord", "v")
+  }
+
+  test("normalise_sequences metadata equals the filled frame's distinct counts") {
+    val cases = Seq(
+      "null id parts and timestamps" -> metaInput(1, 60, 0.1, ghost = false),
+      "an id with only null timestamps" -> metaInput(2, 40, 0.1, ghost = true),
+      "all timestamps null" -> metaInput(3, 20, 1.0, ghost = true),
+      "empty input" -> metaInput(4, 0, 0.0, ghost = false))
+    for ((name, df) <- cases; unit <- Seq("day", "hour", "month")) {
+      val res = TimeSeriesOps.normaliseSequences(df, Seq("a", "b"), "ts", Seq("v"), "ord", unit)
+      // the former metadata query over the filled plan is the oracle
+      val oracle = res.df.agg(
+        count_distinct(col("surrogate_item_id")), count_distinct(col("bucket")),
+        count(lit(1)), sum(when(col("bucket").isNull, 1).otherwise(0))).head()
+      val clue = s"$name, unit $unit"
+      assert(oracle.isNullAt(3) || oracle.getLong(3) == 0L, clue) // no null bucket
+      assert(res.numSequences == oracle.getLong(0), clue)
+      assert(res.seqLen == oracle.getLong(1), clue)
+      assert(res.numSequences * res.seqLen == oracle.getLong(2), clue)
+    }
+    val ghost = TimeSeriesOps.normaliseSequences(
+      metaInput(2, 40, 0.1, ghost = true), Seq("a", "b"), "ts", Seq("v"), "ord")
+    val plain = TimeSeriesOps.normaliseSequences(
+      metaInput(2, 40, 0.1, ghost = false), Seq("a", "b"), "ts", Seq("v"), "ord")
+    assert(ghost.numSequences == plain.numSequences + 1) // still on the grid
+    assert(ghost.seqLen > 0)
+  }
+
+  test("normalise_sequences runs one SQL execution for its metadata") {
+    import graft.internal.SqlExecutionProbe
+    val df = metaInput(5, 30, 0.1, ghost = true)
+    val (res, n) = SqlExecutionProbe.count(spark)(
+      TimeSeriesOps.normaliseSequences(df, Seq("a", "b"), "ts", Seq("v"), "ord"))
+    assert(n == 1)
+    assert(res.numSequences > 0 && res.seqLen > 0)
+  }
+
+  test("unitStep steps the calendar by one unit; quarter is 3 months") {
+    assert(TimeSeriesOps.unitStep("DAY") == "interval 1 day")
+    assert(TimeSeriesOps.unitStep("quarter") == "interval 3 months")
+    assert(TimeSeriesOps.unitStep("hour") == "interval 1 hour")
+    intercept[IllegalArgumentException](TimeSeriesOps.unitStep("fortnight"))
+  }
+
   test("sessionize numbers gap-separated islands per entity") {
     val df = Seq(
       (1, "2024-01-01 00:00:00", 0L), // session 1
