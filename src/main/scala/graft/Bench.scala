@@ -57,8 +57,8 @@ object Bench {
 
   /** Times every [[Harness.selected]] query over `SPARK_GRAFT_SF_DIR`
     * (default sf0.1) in the [[Harness.session]] posture — cold, warm
-    * (median of `SPARK_GRAFT_BENCH_REPS`), a batched sub-floor posture
-    * and, unless `SPARK_GRAFT_AQE_BLOCK=false`, an AQE-on block — and
+    * (median of 3 reps), a batched sub-floor posture and, unless the
+    * session itself runs AQE, an AQE-on block (median of 3 reps) — and
     * prints the full JSON line (also written to `SPARK_GRAFT_BENCH_OUT`,
     * default BENCH_LOCAL.json, or target/BENCH_LOCAL.subset.json when
     * `SPARK_GRAFT_ONLY` names a subset) followed by a compact totals
@@ -71,7 +71,7 @@ object Bench {
     // steady-state timing: one untimed warmup run (JIT, codegen cache,
     // parquet footers), then the median of 3 timed runs — single runs at
     // this scale are dominated by scheduler jitter (±30% observed)
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
+    val reps = 3
     // Two postures, BOTH reported (advisor ask: make the amortization
     // explicit so the judge can grade either):
     //  * cold — the first, fully un-amortized call: DataFrame construction
@@ -99,6 +99,11 @@ object Bench {
         // true median: average the middle two when the count is even
         if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
       }
+    // release every persistent RDD created since `before` was taken
+    def releaseSince(before: collection.Set[Int]): Unit =
+      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!before(id)) rdd.unpersist(blocking = false)
+      }
     // one rep: its time, or the failure's reason. A query built per call
     // (one the registry does not memoize, e.g. duplicateClusters' labels)
     // returns a frame backed by checkpoint blocks the CALLER owns; without
@@ -106,15 +111,12 @@ object Bench {
     // by GC. So every rep releases the persistent RDDs it created, AFTER
     // capturing the time: the release must stay outside the timed window.
     def timed(what: String)(body: => Any): Either[String, Double] = {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       val t0 = System.nanoTime()
       try {
         body
         val t = (System.nanoTime() - t0) / 1e9
-        sc.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!before(id)) rdd.unpersist(blocking = false)
-        }
+        releaseSince(before)
         Right(t)
       } catch {
         case e: Throwable =>
@@ -195,9 +197,7 @@ object Bench {
       // leak sweep (see the stall-guard note above): anything persisted since this
       // query began and still alive now was leaked by one of its untimed
       // executions — release it before the next query measures
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!rddsAtQueryStart(id)) rdd.unpersist(blocking = false)
-      }
+      releaseSince(rddsAtQueryStart)
       name -> (median, cold, jobIds.size, nStages)
     }
     val aqeMain = spark.conf.get("spark.sql.adaptive.enabled").toBoolean
@@ -241,10 +241,10 @@ object Bench {
     // the full set once more. Fresh construction per query — cloning an
     // AdaptiveSparkPlan reuses materialized stages (fake speedup), so the
     // honest adaptive rep rebuilds; JIT/codegen are warm from the main
-    // run, construction cost is included. One pass (bounds harness time).
+    // run, construction cost is included. Skipped when the session
+    // itself runs AQE: the main block already measured that posture.
     val aqeQueries: Map[String, Double] =
-      if (aqeMain || !sys.env.getOrElse("SPARK_GRAFT_AQE_BLOCK", "true").toBoolean)
-        Map.empty
+      if (aqeMain) Map.empty
       else try {
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         System.gc()
@@ -255,17 +255,13 @@ object Bench {
         // included; cloning an AdaptiveSparkPlan would reuse materialized
         // stages — fake), so rep 1 pays the compile, the median of 3
         // reads the warm steady state.
-        val aqeReps = math.max(1,
-          sys.env.getOrElse("SPARK_GRAFT_AQE_REPS", "3").toInt)
         selected.map { case (name, fn) =>
           graft.ext.DropMetrics.setContext(name)
           val rddsAt = spark.sparkContext.getPersistentRDDs.keySet
-          val runs = (1 to aqeReps).map { _ =>
+          val runs = (1 to reps).map { _ =>
             timed(s"$name under AQE")(fn(spark, sfDir).count())
           }
-          spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-            if (!rddsAt(id)) rdd.unpersist(blocking = false)
-          }
+          releaseSince(rddsAt)
           runs.collectFirst { case Left(r) => r }.foreach(failedAqe(name) = _)
           name -> medianOf(runs.collect { case Right(t) => t })
         }.toMap

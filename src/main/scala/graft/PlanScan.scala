@@ -8,12 +8,14 @@ package graft
   * re-discovering them one failing contract at a time. Plans are those
   * of the [[Harness.session]] posture.
   *
-  * Usage: `scripts/run_main.sh graft.PlanScan [sfDir]`
+  * Usage: `scripts/run_main.sh graft.PlanScan [sfDir]`. Exits 2, after
+  * printing every line, when any query failed to plan.
   */
 object PlanScan {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val spark = Harness.session()
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val p = fn(spark, dir).queryExecution.executedPlan.toString
@@ -24,9 +26,15 @@ object PlanScan {
           s" smj=${p.contains("SortMergeJoin")}" +
           s" hashEx=$nEx")
       } catch { case e: Throwable =>
+        failed += name
         println(s"SCAN $name ERROR ${Option(e.getMessage).getOrElse("").take(100)}")
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[planscan] ${failed.size} query failure(s): " +
+        failed.mkString(", "))
+      sys.exit(2)
+    }
   }
 }

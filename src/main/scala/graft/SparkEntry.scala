@@ -704,8 +704,7 @@ object SparkEntry {
   /** Cross-source n-gram overlap audit ([[Dedup.sourceOverlap]]): the
     * source-level exact-Jaccard matrix over distinct 3-gram sets — the
     * corpus-provenance report run before mixing decisions. Exact string
-    * grams (hashGrams stays off) so the DuckDB oracle replays the whole
-    * thing: per-source distinct gram sets, pair intersections, sizes,
+    * grams, so the DuckDB oracle replays the whole thing: per-source distinct gram sets, pair intersections, sizes,
     * Jaccard. */
   private def dedupSourceOverlap(s: SparkSession, dir: String): DataFrame =
     Dedup.sourceOverlap(T(s, dir, "documents"), "text", "source", n = 3)
@@ -800,9 +799,9 @@ object SparkEntry {
     * The guarded posting collect happens at construction, so the registry
     * never memoizes the query — every bench rep re-pays the posting build
     * DuckDB re-runs. The held-out corpus-split posture
-    * (a genuinely unbounded "benchmark") stays on
-    * `contaminationAttribution(broadcastBenchmark = false)`, value-pinned
-    * in ContaminationReportSpec and plan-pinned in PlanContractSpec. */
+    * (a genuinely unbounded "benchmark") stays on the gram-join
+    * `contaminationAttribution`, value-pinned in ContaminationReportSpec
+    * and plan-pinned in PlanContractSpec. */
   private def textContaminationReport(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
     // even/odd split (the fuzzy-decontamination fixture): near-dup pairs
@@ -2664,8 +2663,7 @@ object SparkEntry {
       .withColumn("end_d",
         col("start_d") + 1L + pmod(col("o_orderkey"), lit(30L)))
     ops.IntervalJoin.overlapJoin(o, o, Seq("o_custkey"),
-        "start_d", "end_d", "start_d", "end_d", granuleWidth = 32,
-        pinShuffleHash = true)
+        "start_d", "end_d", "start_d", "end_d", granuleWidth = 32)
       .filter(col("o_orderkey") < col("r_o_orderkey"))
       .groupBy(col("o_year"))
       .agg(count(lit(1)).as("n_pairs"),
@@ -2967,7 +2965,7 @@ object SparkEntry {
   private def p11Stratified(s: SparkSession, dir: String): DataFrame =
     Sampling.stratifiedSample(
         T(s, dir, "events"), col("event_id"), col("event_type"),
-        Seq("purchase" -> 50, "error" -> 2), 10, portable = true)
+        Seq("purchase" -> 50, "error" -> 2), 10)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value"), 2).as("sum_value"))
       .orderBy(col("event_type"))

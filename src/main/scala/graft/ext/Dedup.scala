@@ -1105,10 +1105,9 @@ object Dedup {
     * dedup itself, same rationale as fingerprint document dedup), one
     * groupBy on the doc id for reassembly.
     *
-    * `wideFingerprint` (default true) keys on the 128-bit
-    * [[fingerprint128]]; at 10⁹⁺ paragraphs a single 64-bit key collides
-    * with probability ~3·10⁻² and silently drops a distinct paragraph.
-    * Output is identical whenever no collision exists.
+    * The key is the 128-bit [[fingerprint128]]: at 10⁹⁺ paragraphs a
+    * single 64-bit key collides with probability ~3·10⁻² and would
+    * silently drop a distinct paragraph.
     *
     * Returns (idCol, textCol) with `textCol` rewritten.
     */
@@ -1116,10 +1115,8 @@ object Dedup {
       df: DataFrame,
       idCol: String,
       textCol: String,
-      sep: String = "\n",
-      wideFingerprint: Boolean = true): DataFrame = {
-    val fp = if (wideFingerprint) fingerprint128(col("__para"))
-             else xxhash64(col("__para"))
+      sep: String = "\n"): DataFrame = {
+    val fp = fingerprint128(col("__para"))
     val paras = df
       .select(col(idCol), posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep)))
         .as(Seq("__pos", "__para")))
@@ -1229,40 +1226,6 @@ object Dedup {
         (col("__shared").cast("double") / col("__na")).as("containment_a"),
         (col("__shared").cast("double") / col("__nb")).as("containment_b"))
 
-  /** Cross-source n-gram overlap audit: the SOURCE-level Jaccard matrix —
-    * for every pair of sources sharing at least one distinct word n-gram,
-    * the exact Jaccard of their corpus-wide distinct gram SETS (plus the
-    * raw set sizes). The corpus-provenance twin of the document-level
-    * near-dup ops: it answers "how much of source B is already in source
-    * A" before mixing/weighting decisions, and flags mirror/scrape
-    * relationships between whole crawls that per-document dedup only
-    * reveals pair-by-pair.
-    *
-    * Plan (one corpus text pass, everything after is |grams|-scale or
-    * smaller):
-    *  1. explode distinct per-doc grams → (source, gram), aggregated
-    *     `groupBy(gram).collect_set(source)` — ONE corpus exchange; the
-    *     per-gram set is bounded by the number of sources (map-side
-    *     partial sets dedup before the shuffle), and `hashGrams` thins
-    *     the exchange key to an xxhash64 long for production corpora
-    *     (off by default so the semantics — and the oracle — are exact
-    *     string-set Jaccard).
-    *  2. per-source set sizes from the same per-gram frame (explode the
-    *     source sets — |grams| rows, no second corpus pass).
-    *  3. pair expansion per gram via ONE [[graft.functions.OrderedPairs]]
-    *     kernel eval (sort + C(s,2) loop — no self-join, no interpreted
-    *     HOF lambdas): a gram present in s sources emits C(s,2) pairs, so
-    *     ubiquitous grams (stop-phrases present in every crawl) dominate
-    *     the volume quadratically in |sources| — `maxSourcesPerGram`
-    *     drops grams above the cap from the WHOLE audit (sizes and pairs
-    *     alike, so Jaccard stays internally consistent over the kept gram
-    *     space), the [[ngramPairCounts]] stop-shingle precedent.
-    *  4. per-pair counts join the (|sources|-row, broadcast) size frame.
-    *
-    * Returns (source_a, source_b, n_common, n_a, n_b, jaccard) for pairs
-    * with n_common ≥ 1, source_a < source_b (binary string order —
-    * sources compare and report as strings). Null-source rows drop.
-    */
   /** K-minimum-values (KMV) corpus-pair overlap estimate — the Jaccard
     * similarity of two corpora's SHINGLE SETS from one narrow pass per
     * corpus, with NO pair join and no text exchange: the sketch answer
@@ -1283,16 +1246,10 @@ object Dedup {
     *
     * Returns ONE row: (k_used, n_both, jaccard_estimate, containment_a,
     * containment_b), rounded to `roundTo`. `k_used` < k means the union
-    * has fewer than k distinct shingles — the estimate is then exact
-    * (under EITHER hash: with the whole union sampled, the hash order
-    * is irrelevant). A side that contributes no shingles at all (empty
-    * or all-shorter-than-`shingleLen` corpus) gets containment 0.0, not
-    * null — its 0/0 is coalesced, since n_both is necessarily 0.
-    *
-    * `portable=true` (default) hashes with the 7-hex md5 prefix the
-    * DuckDB oracle replays; `portable=false` is the production path —
-    * one xxhash64 per shingle (no md5, no hex parse), a different but
-    * equally valid sketch order. */
+    * has fewer than k distinct shingles — the estimate is then exact.
+    * A side that contributes no shingles at all (empty or
+    * all-shorter-than-`shingleLen` corpus) gets containment 0.0, not
+    * null — its 0/0 is coalesced, since n_both is necessarily 0. */
   def corpusOverlapEstimate(
       a: DataFrame,
       b: DataFrame,
@@ -1300,15 +1257,12 @@ object Dedup {
       textColB: String,
       shingleLen: Int = 3,
       k: Int = 256,
-      roundTo: Int = 6,
-      portable: Boolean = true): DataFrame = {
+      roundTo: Int = 6): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     import org.apache.spark.sql.GraftColumnBridge
     def sideHashes(df: DataFrame, tc: String, inA: Int): DataFrame = {
-      val grams = GraftColumnBridge.expression(wordNgrams(col(tc), shingleLen))
-      val hashes =
-        if (portable) graft.functions.Md5Prefix(grams, 7)
-        else graft.functions.XxHash64Array(grams)
+      val hashes = graft.functions.Md5Prefix(
+        GraftColumnBridge.expression(wordNgrams(col(tc), shingleLen)), 7)
       df.select(explode(GraftColumnBridge.column(hashes)).as("__h"))
         .select(col("__h"), lit(inA).as("__ia"), lit(1 - inA).as("__ib"))
     }
@@ -1333,24 +1287,52 @@ object Dedup {
           / sum(col("__ib")), roundTo), lit(0.0)).as("containment_b"))
   }
 
+  /** Cross-source n-gram overlap audit: the SOURCE-level Jaccard matrix —
+    * for every pair of sources sharing at least one distinct word n-gram,
+    * the exact Jaccard of their corpus-wide distinct gram SETS (plus the
+    * raw set sizes). The corpus-provenance twin of the document-level
+    * near-dup ops: it answers "how much of source B is already in source
+    * A" before mixing/weighting decisions, and flags mirror/scrape
+    * relationships between whole crawls that per-document dedup only
+    * reveals pair-by-pair.
+    *
+    * Plan (one corpus text pass, everything after is |grams|-scale or
+    * smaller):
+    *  1. explode distinct per-doc grams → (source, gram), aggregated
+    *     `groupBy(gram).collect_set(source)` — ONE corpus exchange; the
+    *     per-gram set is bounded by the number of sources (map-side
+    *     partial sets dedup before the shuffle). Grams are keyed by
+    *     their text, so the result is exact string-set Jaccard.
+    *  2. per-source set sizes from the same per-gram frame (explode the
+    *     source sets — |grams| rows, no second corpus pass).
+    *  3. pair expansion per gram via ONE [[graft.functions.OrderedPairs]]
+    *     kernel eval (sort + C(s,2) loop — no self-join, no interpreted
+    *     HOF lambdas): a gram present in s sources emits C(s,2) pairs, so
+    *     ubiquitous grams (stop-phrases present in every crawl) dominate
+    *     the volume quadratically in |sources| — `maxSourcesPerGram`
+    *     drops grams above the cap from the WHOLE audit (sizes and pairs
+    *     alike, so Jaccard stays internally consistent over the kept gram
+    *     space), the [[ngramPairCounts]] stop-shingle precedent.
+    *  4. per-pair counts join the (|sources|-row, broadcast) size frame.
+    *
+    * Returns (source_a, source_b, n_common, n_a, n_b, jaccard) for pairs
+    * with n_common ≥ 1, source_a < source_b (binary string order —
+    * sources compare and report as strings). Null-source rows drop.
+    */
   def sourceOverlap(
       df: DataFrame,
       textCol: String,
       sourceCol: String,
       n: Int = 3,
-      hashGrams: Boolean = false,
       maxSourcesPerGram: Int = Int.MaxValue,
       roundTo: Int = 6): DataFrame = {
     require(maxSourcesPerGram >= 2,
       s"maxSourcesPerGram must allow pairs (>= 2), got $maxSourcesPerGram")
-    val gramKey: Column => Column =
-      if (hashGrams) g => xxhash64(g) else identity
     // the gram pass is this operator's entire corpus cost — remediate an
     // under-parallel small scan before it (strict no-op at corpus scale)
     val perGram0 = graft.ops.Par.fanOutSmallScan(df)
       .select(col(sourceCol).cast("string").as("__src"),
-        explode(wordNgrams(col(textCol), n)).as("__gram"))
-      .select(col("__src"), gramKey(col("__gram")).as("__g"))
+        explode(wordNgrams(col(textCol), n)).as("__g"))
       .groupBy(col("__g"))
       .agg(collect_set(col("__src")).as("__srcs"))
       .filter(size(col("__srcs")) <= maxSourcesPerGram)
@@ -1628,14 +1610,17 @@ object Dedup {
     * `(id, __sig)`: banded equi-join of corpus buckets against benchmark
     * buckets, exact per-pair agreement count via the native
     * [[graft.functions.LongArrayMatchCount]] kernel, cross-band dedup on
-    * the thin (id, id, count) rows. See [[minHashCrossPairs]] for the
-    * scale rationale. Returns (id_a, id_b, __mc). */
+    * the thin (id, id, count) rows. `broadcastBench` broadcasts the
+    * benchmark buckets (a bounded eval suite, see [[minHashCrossPairs]]);
+    * otherwise both sides shuffle-hash on the bucket key (a corpus-scale
+    * index, see [[minHashCrossPairsFromSignatures]]). Returns (id_a, id_b,
+    * __mc). */
   private def crossPairsFromSigs(
       corpusSigs: DataFrame,
       benchSigs: DataFrame,
       bands: Int,
       rowsPerBand: Int,
-      broadcastBenchmark: Boolean,
+      broadcastBench: Boolean,
       maxBenchBucketSize: Int,
       tag: String): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge
@@ -1651,7 +1636,7 @@ object Dedup {
     val b = capBuckets(b0, Seq("band_idx", "band_hash"),
       maxBenchBucketSize, tag)
     val joined =
-      if (broadcastBenchmark) c.join(broadcast(b), Seq("band_idx", "band_hash"))
+      if (broadcastBench) c.join(broadcast(b), Seq("band_idx", "band_hash"))
       else c.hint("shuffle_hash").join(b.hint("shuffle_hash"),
         Seq("band_idx", "band_hash"))
     joined
@@ -1675,13 +1660,15 @@ object Dedup {
     * exact agreeing-hash fraction ≥ `threshold`.
     *
     * Scale: the corpus never self-joins — per-bucket pair volume is
-    * |corpus bucket| × |benchmark bucket|, linear in the corpus. With
-    * `broadcastBenchmark` (default — eval suites are MBs) the corpus side
+    * |corpus bucket| × |benchmark bucket|, linear in the corpus. The
+    * benchmark buckets broadcast (eval suites are MBs), so the corpus side
     * is one map stage end-to-end: signatures, banding, the broadcast-hash
     * join and the verify kernel all pipeline with NO corpus exchange; only
-    * the thin (id_a, id_b, count) cross-band dedup shuffles. Set it false
-    * when the "benchmark" is itself corpus-scale (held-out-split
-    * decontamination) → both sides shuffle-hash on the bucket key.
+    * the thin (id_a, id_b, count) cross-band dedup shuffles. When the
+    * "benchmark" is itself corpus-scale (held-out-split decontamination),
+    * persist its signatures with [[writeSignatures]] and use
+    * [[minHashCrossPairsFromSignatures]], which shuffle-hashes both sides
+    * on the bucket key.
     *
     * Returns (id_a: corpus id, id_b: benchmark id, sig_similarity).
     */
@@ -1696,7 +1683,6 @@ object Dedup {
       shingleLen: Int = 3,
       numHashes: Int = 32,
       bands: Int = 8,
-      broadcastBenchmark: Boolean = true,
       maxBenchBucketSize: Int = 10000): DataFrame = {
     require(bands > 0 && numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes)")
@@ -1706,7 +1692,7 @@ object Dedup {
     val bs = minHashSignatureArray(benchmark, benchIdCol, benchTextCol,
         shingleLen, numHashes)
       .select(col(benchIdCol).as("__id"), col("__sig"))
-    crossPairsFromSigs(cs, bs, bands, rowsPerBand, broadcastBenchmark,
+    crossPairsFromSigs(cs, bs, bands, rowsPerBand, broadcastBench = true,
         maxBenchBucketSize, "minhash_cross")
       .select(col("id_a"), col("id_b"),
         (col("__mc").cast("double") / lit(numHashes.toDouble))
@@ -1739,7 +1725,7 @@ object Dedup {
           array((0 until k).map(i => col(s"minhash_$i")): _*).as("__sig"))
     crossPairsFromSigs(sigsOf(corpus, idCol, textCol),
         sigsOf(benchmark, benchIdCol, benchTextCol),
-        bands, rowsPerBand, broadcastBenchmark = true,
+        bands, rowsPerBand, broadcastBench = true,
         maxBenchBucketSize, "minhash_cross_portable")
       .select(col("id_a"), col("id_b"),
         round(col("__mc").cast("double") / lit(k.toDouble), 6)
@@ -1775,8 +1761,7 @@ object Dedup {
       threshold: Double = 0.7,
       shingleLen: Int = 3,
       numHashes: Int = 32,
-      bands: Int = 8,
-      broadcastBenchmark: Boolean = true): DataFrame = {
+      bands: Int = 8): DataFrame = {
     // sentinel exclusion (scaladoc): a bench doc with no shingles emits
     // the all-sentinel signature and would "contaminate" every short
     // corpus doc — same kernel, same tokenization, so the predicate is
@@ -1784,8 +1769,7 @@ object Dedup {
     val bench = benchmark.filter(
       size(wordNgrams(col(benchTextCol), shingleLen)) > 0)
     val hits = minHashCrossPairs(corpus, bench, idCol, benchIdCol,
-        textCol, benchTextCol, threshold, shingleLen, numHashes, bands,
-        broadcastBenchmark)
+        textCol, benchTextCol, threshold, shingleLen, numHashes, bands)
       .select(col("id_a").as(idCol)).distinct()
     corpus.join(hits, Seq(idCol), "left_anti")
   }
@@ -1824,23 +1808,17 @@ object Dedup {
     * though it is a sliver of the page — the [[contaminationScore]]
     * per-corpus-doc fraction under-weights exactly that case).
     *
-    * Scale: with `broadcastBenchmark` (default) the benchmark gram→id
-    * pairs and per-doc gram counts broadcast and the corpus side is one
-    * explode feeding the broadcast join, so corpus text never exchanges;
-    * the only shuffle carries (corpus id, bench id, count) rows.
-    * BOUNDARY (same as [[minHashCrossPairs]]): the broadcast is sized for
-    * a real eval suite (KBs–MBs of text, millions of grams at most). A
-    * corpus-for-benchmark argument swap — or held-out-split attribution
-    * where the "benchmark" IS corpus-scale — must pass
-    * `broadcastBenchmark = false`, which shuffle-hash-joins both gram
-    * streams on the gram key instead (no driver-sized structure anywhere).
+    * Scale: both gram streams shuffle-hash-join on the gram key, so no
+    * driver-sized structure exists anywhere and the benchmark may be
+    * corpus-scale (held-out-split attribution); document text never
+    * exchanges, only gram hashes and ids. A bounded eval suite is
+    * served by [[contaminationAttributionCompact]], which folds the
+    * benchmark into one kernel and drops the gram-level join.
     * Returns (bench_id, n_contaminated_docs, max_overlap) for benchmark
     * docs with ≥1 hit.
     *
     * Duplicate `benchIdCol` rows contribute the UNION of their gram sets
-    * (one benchmark-side groupBy exchange); pass
-    * `assumeUniqueBenchIds = true` to skip that aggregate when ids are
-    * unique by construction (see [[benchGramRows]]).
+    * (one benchmark-side groupBy exchange, see [[benchGramRows]]).
     */
   def contaminationAttribution(
       corpus: DataFrame,
@@ -1850,9 +1828,7 @@ object Dedup {
       textCol: String,
       benchTextCol: String,
       n: Int = 3,
-      minFraction: Double = 0.5,
-      broadcastBenchmark: Boolean = true,
-      assumeUniqueBenchIds: Boolean = false): DataFrame = {
+      minFraction: Double = 0.5): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge
     requireNotAttributionReserved(idCol)
     // benchIdCol == "bench_id" is the identity rename — allowed
@@ -1864,15 +1840,22 @@ object Dedup {
     // remediate under-parallel scans before them (no-op at corpus scale,
     // see graft.ops.Par; "text never exchanges" still holds there)
     val benchGrams = benchGramRows(graft.ops.Par.fanOutSmallScan(benchmark),
-      benchIdCol, benchTextCol, gramHashes, assumeUniqueBenchIds)
+      benchIdCol, benchTextCol, gramHashes)
     val corpusGrams = graft.ops.Par.fanOutSmallScan(corpus)
       .select(col(idCol).as("__cid"),
         explode(gramHashes(col(textCol))).as("__g"))
-    val hits =
-      if (broadcastBenchmark) corpusGrams.join(broadcast(benchGrams), Seq("__g"))
-      else corpusGrams.hint("shuffle_hash")
-        .join(benchGrams.hint("shuffle_hash"), Seq("__g"))
-    attributionFromHits(hits, minFraction)
+    // hit rows (cid, bench_id, nb): `__nb` is constant per bench_id
+    // (carried through the explode), so max() recovers it without a
+    // sizes join
+    corpusGrams.hint("shuffle_hash")
+      .join(benchGrams.hint("shuffle_hash"), Seq("__g"))
+      .groupBy(col("__cid"), col("bench_id"))
+      .agg(count(lit(1)).as("__shared"), max(col("__nb")).as("__nb"))
+      .filter(col("__shared") >= col("__nb") * lit(minFraction))
+      .groupBy(col("bench_id"))
+      .agg(count(lit(1)).as("n_contaminated_docs"),
+        round(max(col("__shared").cast("double") / col("__nb")), 6)
+          .as("max_overlap"))
   }
 
   /** [[contaminationAttribution]] for BOUNDED benchmarks (eval suites —
@@ -1888,19 +1871,17 @@ object Dedup {
     * [[graft.streaming.ContaminationGate.withScore]]): the posting
     * collect is guarded by `maxBenchmarkPostings` and fails loudly with
     * the argument-swap diagnostic — a corpus-sized "benchmark" (held-out
-    * split audits) must use [[contaminationAttribution]] with
-    * `broadcastBenchmark = false`, which never materializes the
-    * benchmark anywhere.
+    * split audits) must use [[contaminationAttribution]], which never
+    * materializes the benchmark anywhere.
     *
-    * Value-identical to the join forms (ContaminationReportSpec):
+    * Value-identical to the join form (ContaminationReportSpec):
     * duplicate `benchIdCol` rows contribute the UNION of their gram sets
     * (the driver build unions them). Requires bigint bench ids (the
     * engine's doc-id convention) so the output schema matches the join
-    * form exactly. CORPUS ids must be UNIQUE (the doc-id convention,
-    * same contract class as `assumeUniqueBenchIds`): the kernel scores
-    * each corpus ROW independently, while the join form first merges a
-    * duplicated id's gram hits — two half-covering rows under one id
-    * would count once there and twice here. */
+    * form exactly. CORPUS ids must be UNIQUE (the doc-id convention):
+    * the kernel scores each corpus ROW independently, while the join form
+    * first merges a duplicated id's gram hits — two half-covering rows
+    * under one id would count once there and twice here. */
   def contaminationAttributionCompact(
       corpus: DataFrame,
       benchmark: DataFrame,
@@ -1948,7 +1929,7 @@ object Dedup {
           s"$totalPostings (id, gram) postings > cap $maxBenchmarkPostings " +
           "— too large for the single-pass kernel. Did you swap the " +
           "corpus and benchmark arguments? For a corpus-sized benchmark " +
-          "use contaminationAttribution(broadcastBenchmark = false).")
+          "use Dedup.contaminationAttribution, which shuffle-joins the grams.")
     val perRow = benchGramArrays.collect()
     // normalize to one (id, distinct grams) entry per bench id. Fast path
     // (unique ids — the eval-suite norm): per-row arrays are already
@@ -2031,8 +2012,7 @@ object Dedup {
     * internal selects instead of erroring loudly (same guard class as
     * Retrieval.ReservedCols, advisor r10). */
   private val AttributionReserved = Set("__g", "__gs", "__nb", "__cid",
-    "__nc", "__shared", "bench_id", "n_grams", "n_contaminated",
-    "contamination", "n_contaminated_docs", "max_overlap")
+    "__shared", "bench_id", "n_contaminated_docs", "max_overlap")
 
   private def requireNotAttributionReserved(cols: String*): Unit =
     cols.foreach(c => require(!AttributionReserved(c),
@@ -2040,116 +2020,26 @@ object Dedup {
         s"internals (${AttributionReserved.toSeq.sorted.mkString(", ")})" +
         " — rename it first"))
 
-  /** Bench side of the attribution joins: (bench_id, __nb, __g) with the
+  /** Bench side of the attribution join: (bench_id, __nb, __g) with the
     * doc's gram-SET size riding alongside its exploded grams (two selects —
     * not one — so explode references a resolved column, not a lateral
-    * alias).
-    *
-    * Default (`assumeUniqueIds = false`): duplicate `benchIdCol` rows (a
-    * benchmark stored one example per row under a shared task id)
-    * contribute the UNION of their gram sets and `__nb` is the union's
-    * size — attribution is invariant to how the benchmark text is
-    * row-split (advisor r10: the previous carried-size path took one
-    * row's size under duplicate ids, a silent wrong answer). The union
-    * costs ONE groupBy exchange of the packed per-row gram arrays.
-    *
-    * `assumeUniqueIds = true` is the zero-exchange fast path for callers
-    * whose bench ids are unique BY CONSTRUCTION (a keyed eval suite, or
-    * the held-out-split posture where ids come from the corpus's own
-    * key): no benchmark-sizes scan, aggregate, or join anywhere — the
-    * size rides the explode. */
+    * alias). Duplicate `benchIdCol` rows (a benchmark stored one example
+    * per row under a shared task id) contribute the UNION of their gram
+    * sets and `__nb` is the union's size, so attribution is invariant to
+    * how the benchmark text is row-split. The union costs ONE groupBy
+    * exchange of the packed per-row gram arrays. */
   private def benchGramRows(
       benchmark: DataFrame,
       benchIdCol: String,
       benchTextCol: String,
-      gramHashes: Column => Column,
-      assumeUniqueIds: Boolean): DataFrame = {
-    val perRow = benchmark
+      gramHashes: Column => Column): DataFrame =
+    benchmark
       .select(col(benchIdCol).as("bench_id"),
         gramHashes(col(benchTextCol)).as("__gs"))
-    val sized =
-      if (assumeUniqueIds) perRow
-      else perRow
-        .groupBy(col("bench_id"))
-        .agg(array_distinct(flatten(collect_list(col("__gs")))).as("__gs"))
-    sized.select(col("bench_id"), size(col("__gs")).as("__nb"),
-      explode(col("__gs")).as("__g"))
-  }
-
-  /** (cid, bench_id, nb) hit rows → per-benchmark-doc attribution — the
-    * shared tail of [[contaminationAttribution]] / [[contaminationReport]].
-    * `__nb` is constant per bench_id (carried through the explode), so
-    * max() recovers it without a sizes join. */
-  private def attributionFromHits(
-      hits: DataFrame,
-      minFraction: Double): DataFrame =
-    hits
-      .groupBy(col("__cid"), col("bench_id"))
-      .agg(count(lit(1)).as("__shared"), max(col("__nb")).as("__nb"))
-      .filter(col("__shared") >= col("__nb") * lit(minFraction))
       .groupBy(col("bench_id"))
-      .agg(count(lit(1)).as("n_contaminated_docs"),
-        round(max(col("__shared").cast("double") / col("__nb")), 6)
-          .as("max_overlap"))
-
-  /** BOTH contamination directions from ONE corpus gram pass — what a real
-    * decontamination run ships: the per-corpus-doc score frame (gates the
-    * corpus) and the per-benchmark-doc attribution report (names the leaks).
-    * Run separately, [[contaminationScore]] and [[contaminationAttribution]]
-    * each explode the corpus's n-grams — the dominant cost at corpus scale.
-    * Here the exploded `(cid, gram)` frame and the gram-level hit join are
-    * computed once (lazily `localCheckpoint`ed, materialized by the first
-    * consumer; swap for reliable `.checkpoint()` on a cluster) and both
-    * outputs aggregate from them.
-    *
-    * Returns (scores, attribution) with schemas identical to
-    * [[contaminationScore]] / [[contaminationAttribution]] — value-equality
-    * against the separate runs is pinned in ContaminationReportSpec.
-    */
-  def contaminationReport(
-      corpus: DataFrame,
-      benchmark: DataFrame,
-      idCol: String,
-      benchIdCol: String,
-      textCol: String,
-      benchTextCol: String,
-      n: Int = 3,
-      minFraction: Double = 0.5,
-      broadcastBenchmark: Boolean = true,
-      assumeUniqueBenchIds: Boolean = false): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.GraftColumnBridge
-    requireNotAttributionReserved(idCol)
-    if (benchIdCol != "bench_id") requireNotAttributionReserved(benchIdCol)
-    def gramHashes(c: Column): Column = GraftColumnBridge.column(
-      graft.functions.XxHash64Array(
-        GraftColumnBridge.expression(wordNgrams(c, n))))
-    val corpusGrams = corpus
-      .select(col(idCol).as("__cid"),
-        explode(gramHashes(col(textCol))).as("__g"))
-      .localCheckpoint(eager = false) // ONE corpus explode for both outputs
-    val benchGrams = benchGramRows(benchmark, benchIdCol, benchTextCol,
-        gramHashes, assumeUniqueBenchIds)
-      .localCheckpoint(eager = false)
-    // gram-level hits (cid, g, bench_id, nb): both aggregates consume this
-    val hits =
-      (if (broadcastBenchmark) corpusGrams.join(broadcast(benchGrams), Seq("__g"))
-       else corpusGrams.hint("shuffle_hash")
-         .join(benchGrams.hint("shuffle_hash"), Seq("__g")))
-        .localCheckpoint(eager = false)
-    // score direction: a gram hitting k bench docs still counts ONCE for
-    // the corpus doc's contaminated fraction (mirrors contaminationScore's
-    // distinct bench gram set)
-    val contaminated = hits.select(col("__cid"), col("__g")).distinct()
-      .groupBy(col("__cid")).agg(count(lit(1)).as("__nc"))
-    val scores = corpusGrams.groupBy(col("__cid"))
-      .agg(count(lit(1)).as("n_grams"))
-      .join(contaminated, Seq("__cid"), "left")
-      .select(col("__cid").as(idCol), col("n_grams"),
-        coalesce(col("__nc"), lit(0L)).as("n_contaminated"),
-        round(coalesce(col("__nc"), lit(0L)) / col("n_grams"), 6)
-          .as("contamination"))
-    (scores, attributionFromHits(hits, minFraction))
-  }
+      .agg(array_distinct(flatten(collect_list(col("__gs")))).as("__gs"))
+      .select(col("bench_id"), size(col("__gs")).as("__nb"),
+        explode(col("__gs")).as("__g"))
 
   /** Persist a corpus's production MinHash signatures as parquet
     * `(idCol, sig: array<long>)` — the incremental-ingest analogue of
@@ -2178,8 +2068,7 @@ object Dedup {
     * `(id, sig array<long>)` frame) — identical results to
     * [[minHashCrossPairs]] with the historical corpus as `benchmark`,
     * without re-shingling it. The signature side is typically
-    * corpus-scale, so the default posture is the shuffle-hash banded
-    * join (`broadcastSignatures = false`); flip it for a small index.
+    * corpus-scale, so both sides shuffle-hash on the bucket key.
     * Returns (id_a: new-shard id, id_b: indexed id, sig_similarity). */
   def minHashCrossPairsFromSignatures(
       newDocs: DataFrame,
@@ -2192,7 +2081,6 @@ object Dedup {
       shingleLen: Int = 3,
       numHashes: Int = 32,
       bands: Int = 8,
-      broadcastSignatures: Boolean = false,
       maxIndexBucketSize: Int = 10000): DataFrame = {
     require(bands > 0 && numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes)")
@@ -2202,7 +2090,7 @@ object Dedup {
       .select(col(idCol).as("__id"), col("__sig"))
     val bs = signatures
       .select(col(sigIdCol).as("__id"), col(sigCol).as("__sig"))
-    crossPairsFromSigs(cs, bs, bands, rowsPerBand, broadcastSignatures,
+    crossPairsFromSigs(cs, bs, bands, rowsPerBand, broadcastBench = false,
         maxIndexBucketSize, "minhash_cross_index")
       .select(col("id_a"), col("id_b"),
         (col("__mc").cast("double") / lit(numHashes.toDouble))

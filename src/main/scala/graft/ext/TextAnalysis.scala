@@ -542,12 +542,12 @@ object TextAnalysis {
     * [[mixtureByTokenBudget]] — bucketed, no full-group window, the text
     * never shuffled.
     *
-    * Determinism note: with `integerWeights` (the default) the per-group
-    * weight is `floor(total_g^α)` as a LONG, so the normalization sums
-    * integers — exact in any order, reproducible across engines. The raw
-    * double weights would make the denominator depend on float summation
-    * order (engine- and partition-order-dependent ulps) and a budget's
-    * `floor` could flip on a boundary. α = 0.5 additionally uses `sqrt`,
+    * Determinism note: the per-group weight is `floor(total_g^α)` as a
+    * LONG, so the normalization sums integers — exact in any order,
+    * reproducible across engines. Raw double weights would make the
+    * denominator depend on float summation order (engine- and
+    * partition-order-dependent ulps) and a budget's `floor` could flip
+    * on a boundary. α = 0.5 additionally uses `sqrt`,
     * which IEEE 754 requires to be correctly rounded (unlike `pow`).
     * Budgets CAP at available data for upsampled groups (the prefix just
     * keeps the whole group — emitting repeat epochs is a writer concern,
@@ -556,8 +556,7 @@ object TextAnalysis {
   def mixtureByTemperature(
       df: DataFrame, idCol: String, groupCol: String, textCol: String,
       alpha: Double, budgetFraction: Double, seed: String = "42",
-      numBuckets: Int = 4096, broadcastStatus: Boolean = true,
-      integerWeights: Boolean = true): DataFrame = {
+      numBuckets: Int = 4096, broadcastStatus: Boolean = true): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
     require(budgetFraction >= 0 && budgetFraction <= 1,
       s"budgetFraction must be in [0, 1], got $budgetFraction")
@@ -572,9 +571,8 @@ object TextAnalysis {
         // onto cum) computed the same values through four extra plan
         // nodes and two extra broadcast exchanges; windows keep the
         // arithmetic identical — group totals are exact long sums, and
-        // with `integerWeights` the global __den/__tot sums accumulate
-        // integer-valued doubles / longs, exact in any order (the raw-
-        // double caveat in the scaladoc applies to both shapes equally).
+        // the global __den/__tot sums accumulate integer-valued doubles /
+        // longs, exact in any order.
         import org.apache.spark.sql.expressions.Window
         val wg = Window.partitionBy(groupCol)
           .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -582,12 +580,10 @@ object TextAnalysis {
         // window is trivially small no matter the corpus size
         val wAll = Window.partitionBy()
           .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        def rawW(gt: Column) =
-          if (alpha == 0.5) sqrt(gt.cast("double"))
-          else pow(gt.cast("double"), alpha)
-        def weight(gt: Column) =
-          if (integerWeights) floor(rawW(gt)).cast("long").cast("double")
-          else rawW(gt)
+        def weight(gt: Column) = floor(
+            if (alpha == 0.5) sqrt(gt.cast("double"))
+            else pow(gt.cast("double"), alpha))
+          .cast("long").cast("double")
         // one designated row per group (its first bucket) carries the
         // group's (total, weight) into the global sums. Two selects, not
         // a withColumn ladder: every Dataset op re-analyzes the whole

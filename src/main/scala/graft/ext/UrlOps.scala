@@ -357,9 +357,7 @@ object UrlOps {
     *     millions, not corpus-sized);
     *  2. the gate pass is a broadcast LEFT ANTI join against the BAD
     *     domain set (below-threshold domains are the pathological
-    *     minority — blocklist-shaped; pass `broadcastBad = false` to
-    *     shuffle-join if a harsh threshold makes the bad set
-    *     corpus-shaped).
+    *     minority — blocklist-shaped).
     *
     * Threshold comparisons tolerate cross-engine float-summation-order
     * ulps by the usual margin argument: a domain mean sits within 1e-15
@@ -368,8 +366,7 @@ object UrlOps {
   def dropLowQualityDomains(
       df: DataFrame, urlCol: String, scoreCol: String,
       minMeanScore: Double,
-      multiLabelSuffixes: Seq[String] = DefaultMultiLabelSuffixes,
-      broadcastBad: Boolean = true): DataFrame = {
+      multiLabelSuffixes: Seq[String] = DefaultMultiLabelSuffixes): DataFrame = {
     require(!df.columns.contains("__graft_dom"),
       "input already has the internal __graft_dom column")
     val withDom = df.withColumn("__graft_dom",
@@ -381,9 +378,7 @@ object UrlOps {
       .agg(avg(col(scoreCol)).as("__mean"))
       .filter(col("__mean") < minMeanScore)
       .select(col("__graft_dom"))
-    withDom.join(
-        if (broadcastBad) broadcast(bad) else bad,
-        Seq("__graft_dom"), "left_anti")
+    withDom.join(broadcast(bad), Seq("__graft_dom"), "left_anti")
       .drop("__graft_dom")
   }
 
@@ -402,8 +397,7 @@ object UrlOps {
       df: DataFrame, urlCol: String, scoreCol: String,
       minMeanScore: Double,
       keepCols: Seq[String],
-      multiLabelSuffixes: Seq[String] = DefaultMultiLabelSuffixes,
-      broadcastBad: Boolean = true): DataFrame = {
+      multiLabelSuffixes: Seq[String] = DefaultMultiLabelSuffixes): DataFrame = {
     require(!df.columns.contains("__graft_dom"),
       "input already has the internal __graft_dom column")
     val narrow = df
@@ -417,9 +411,7 @@ object UrlOps {
       .agg(avg(col(scoreCol)).as("__mean"))
       .filter(col("__mean") < minMeanScore)
       .select(col("__graft_dom"))
-    narrow.join(
-        if (broadcastBad) broadcast(bad) else bad,
-        Seq("__graft_dom"), "left_anti")
+    narrow.join(broadcast(bad), Seq("__graft_dom"), "left_anti")
       .drop("__graft_dom")
   }
 }

@@ -13,13 +13,17 @@ import org.apache.spark.sql.functions._
   * Plan (the standard granule-bucketing decomposition): each interval
   * explodes to the fixed-width GRANULES it covers (`sequence` — bounded
   * by interval span / `granuleWidth`), the two sides equi-join on
-  * (keys, granule) — an ordinary shuffle-hash/sort-merge join — and a
-  * pair is KEPT only at the granule containing `greatest(l.start,
-  * r.start)`: two overlapping intervals both cover that granule (overlap
-  * means `max(start) < min(end)`), and it is unique per pair, so every
-  * overlapping pair survives exactly once with NO distinct/dedup
-  * exchange. Non-overlapping co-granule pairs fail the residual
-  * predicate.
+  * (keys, granule) — a shuffle-hash join — and a pair is KEPT only at
+  * the granule containing `greatest(l.start, r.start)`: two overlapping
+  * intervals both cover that granule (overlap means `max(start) <
+  * min(end)`), and it is unique per pair, so every overlapping pair
+  * survives exactly once with NO distinct/dedup exchange. Non-overlapping co-granule pairs fail the residual
+  * predicate. The pair join is pinned `shuffle_hash`: the granule
+  * explode makes Catalyst's size estimate collapse, and left to itself
+  * the planner would BROADCAST a corpus-sized side (the
+  * banded-dedup-join hazard). A shuffled-hash build holds one
+  * partition's right rows in memory, bounded by granuleWidth tuning +
+  * salting (an un-salted hot partition can OOM).
   *
   * Contracts: intervals are HALF-OPEN `[start, end)` over a numeric axis
   * (epoch days/seconds — cast timestamps upstream); touching intervals
@@ -52,16 +56,6 @@ object IntervalJoin {
     *                 few by definition), never a driver collect.
     * @param hotThreshold right-rows-per-bucket above which a bucket is
     *                 salted (only read when saltHotBuckets > 1)
-    * @param pinShuffleHash pin the pair join `shuffle_hash` (OFF by
-    *                 default): the planner's default (spill-safe
-    *                 sort-merge, or broadcast by its own estimate) never
-    *                 changes a caller's memory posture. Opt IN when the
-    *                 granule explode makes Catalyst's size estimate
-    *                 collapse and BROADCAST a corpus-sized side (the
-    *                 banded-dedup-join hazard) — the trade being that a
-    *                 shuffled-hash build holds one partition's right
-    *                 rows in memory, bounded by granuleWidth tuning +
-    *                 salting (an un-salted hot partition can OOM).
     */
   def overlapJoin(
       left: DataFrame, right: DataFrame,
@@ -71,8 +65,7 @@ object IntervalJoin {
       granuleWidth: Long,
       rightPrefix: String = "r_",
       saltHotBuckets: Int = 1,
-      hotThreshold: Long = 1000000L,
-      pinShuffleHash: Boolean = false): DataFrame = {
+      hotThreshold: Long = 1000000L): DataFrame = {
     require(granuleWidth >= 1, s"granuleWidth must be >= 1, got $granuleWidth")
     require(saltHotBuckets >= 1,
       s"saltHotBuckets must be >= 1, got $saltHotBuckets")
@@ -132,7 +125,7 @@ object IntervalJoin {
     }
     val rs = col(s"$rightPrefix$rStart")
     val re = col(s"$rightPrefix$rEnd")
-    l.join(if (pinShuffleHash) r.hint("shuffle_hash") else r, joinKeys)
+    l.join(r.hint("shuffle_hash"), joinKeys)
       // overlap residual + the keep-once granule: both sides cover the
       // granule of the later start, and only there does the pair emit
       // (each right row lives in exactly ONE salt slice, so salting

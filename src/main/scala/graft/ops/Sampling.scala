@@ -166,16 +166,15 @@ object Sampling {
     * Still a pure map-side filter — the rate table compiles into a CASE
     * chain, so there is no join and no shuffle; the same key hashes to
     * the same gate in every stratum, keeping cross-strata samples
-    * coherent. Production gate = xxhash64; `portable = true` uses the
-    * md5 gate for cross-engine reconciliation. */
+    * coherent. The gate is the md5 one of [[hashSamplePortable]], so the
+    * sample is reproducible in any engine with md5. */
   def stratifiedSample(
       df: DataFrame,
       keyCol: Column,
       strataCol: Column,
       rates: Seq[(String, Int)],
-      defaultPercent: Int,
-      portable: Boolean = false): DataFrame = {
-    val gate = if (portable) portableGate(keyCol) else productionGate(keyCol)
+      defaultPercent: Int): DataFrame = {
+    val gate = portableGate(keyCol)
     val pct = rates.foldRight(lit(defaultPercent): Column) {
       case ((v, p), rest) => when(strataCol === v, p).otherwise(rest)
     }

@@ -75,8 +75,9 @@ object FuzzyContaminationGate {
         s"FuzzyContaminationGate: benchmark side has > $maxBenchmarkSigs " +
           "documents — too large for the streaming gate's driver-side " +
           "signature index. Did you swap the corpus and benchmark " +
-          "arguments? For a corpus-scale benchmark use the batch " +
-          "fuzzyDecontaminate(broadcastBenchmark = false).")
+          "arguments? For a corpus-scale benchmark persist its " +
+          "signatures with Dedup.writeSignatures and pair against them " +
+          "with the batch Dedup.minHashCrossPairsFromSignatures.")
     val flat = new Array[Long](capped.length * numHashes)
     var i = 0
     while (i < capped.length) {

@@ -27,20 +27,6 @@ object StreamingResample {
       .agg(sum(col(valueCol)).as(valueCol))
       .select(col(idCol), col("bucket.start").as("bucket_start"), col(valueCol))
 
-  /** Sliding-window variant (overlapping windows). */
-  def slidingSum(
-      df: DataFrame,
-      idCol: String,
-      tsCol: String,
-      valueCol: String,
-      windowLen: String = "1 hour",
-      slide: String = "15 minutes",
-      watermark: String = "1 hour"): DataFrame =
-    df.withWatermark(tsCol, watermark)
-      .groupBy(col(idCol), window(col(tsCol), windowLen, slide).as("bucket"))
-      .agg(sum(col(valueCol)).as(valueCol))
-      .select(col(idCol), col("bucket.start").as("bucket_start"), col(valueCol))
-
   /** Stream-stream interval join: pair each left event with right events
     * for the same key whose timestamp falls within `[left.ts - lookback,
     * left.ts]` — the streaming cousin of the as-of join (ops.AsOfJoin).

@@ -6,8 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{Dedup, Similarity}
 
 /** Round-14 corpus-audit family: soft dedup weights, cross-source overlap,
-  * embedding centroid drift. Closed-form fixtures, posture equivalences
-  * (hashGrams on/off), and degenerate inputs.
+  * embedding centroid drift. Closed-form fixtures and degenerate inputs.
   */
 class AuditOpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -91,17 +90,6 @@ class AuditOpsSpec extends AnyFunSuite {
       .as[(String, String, Long, Long, Long, Double)].collect().toSeq
     // only A-B share a gram ("a b c"): 1 / (2 + 2 - 1) = 1/3
     assert(got == Seq(("A", "B", 1L, 2L, 2L, 0.333333)))
-  }
-
-  test("sourceOverlap: hashGrams posture is value-identical") {
-    val docs = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-    val exact = Dedup.sourceOverlap(docs, "text", "source")
-      .orderBy("source_a", "source_b").collect().toSeq
-    val hashed = Dedup.sourceOverlap(docs, "text", "source", hashGrams = true)
-      .orderBy("source_a", "source_b").collect().toSeq
-    assert(exact == hashed)
-    assert(exact.nonEmpty)
   }
 
   test("sourceOverlap: maxSourcesPerGram drops ubiquitous grams from the " +

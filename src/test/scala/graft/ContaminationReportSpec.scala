@@ -6,13 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ext.Dedup
 
-/** The fused [[Dedup.contaminationReport]] (one corpus gram pass, both
-  * directions) must be value-identical to running [[Dedup.contaminationScore]]
-  * and [[Dedup.contaminationAttribution]] separately — the two oracle rows
-  * `text_contamination` / `text_contamination_report` pin the separate
-  * functions against DuckDB; this spec pins the fusion against them, in
-  * both join postures, on corpora with real overlap, empty docs, and
-  * no-hit docs.
+/** The single-pass [[Dedup.contaminationAttributionCompact]] must be
+  * value-identical to the gram-join [[Dedup.contaminationAttribution]] —
+  * the oracle row `text_contamination_report` pins the compact form
+  * against DuckDB; this spec pins it against the join form on corpora
+  * with real overlap, duplicate bench ids and zero-gram edges, and pins
+  * its over-cap diagnostic.
   */
 class ContaminationReportSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -33,27 +32,6 @@ class ContaminationReportSpec extends AnyFunSuite {
 
   private def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
-
-  test("contaminationReport == separate score + attribution (both postures)") {
-    for (seed <- Seq(3, 11); bcast <- Seq(true, false)) {
-      val docs = corpusOf(seed, 60)
-      val corpus = docs.filter(col("doc_id") % 2 === 0)
-      val bench = docs.filter(col("doc_id") % 2 === 1)
-      val expScore = Dedup.contaminationScore(corpus, bench, "doc_id", "text")
-      val expAttr = Dedup.contaminationAttribution(
-        corpus, bench, "doc_id", "doc_id", "text", "text",
-        broadcastBenchmark = bcast)
-      val (gotScore, gotAttr) = Dedup.contaminationReport(
-        corpus, bench, "doc_id", "doc_id", "text", "text",
-        broadcastBenchmark = bcast)
-      assert(gotScore.columns.toSeq == expScore.columns.toSeq)
-      assert(gotAttr.columns.toSeq == expAttr.columns.toSeq)
-      assert(rows(gotScore) == rows(expScore),
-        s"score mismatch (seed=$seed bcast=$bcast)")
-      assert(rows(gotAttr) == rows(expAttr),
-        s"attribution mismatch (seed=$seed bcast=$bcast)")
-    }
-  }
 
   test("contaminationAttributionCompact (single-pass kernel) == join-form " +
       "attribution, incl. duplicate bench ids and zero-gram edges") {
@@ -89,17 +67,9 @@ class ContaminationReportSpec extends AnyFunSuite {
         big, big, "doc_id", "doc_id", "text", "text",
         maxBenchmarkPostings = 10))
     assert(e.getMessage.contains("swap"), s"unexpected: ${e.getMessage}")
-  }
-
-  test("report handles a benchmark with zero overlap and empty docs") {
-    val corpus = Seq((0L, "aa bb cc dd ee"), (2L, ""), (4L, "one two")).toDF("doc_id", "text")
-    val bench = Seq((1L, "xx yy zz ww vv"), (3L, "")).toDF("doc_id", "text")
-    val (score, attr) = Dedup.contaminationReport(
-      corpus, bench, "doc_id", "doc_id", "text", "text")
-    val s = score.orderBy("doc_id").collect()
-    // only docs with >= 1 gram emit a row; nothing is contaminated
-    assert(s.map(_.getLong(0)).toSeq == Seq(0L))
-    assert(s.forall(_.getLong(2) == 0L))
-    assert(attr.count() == 0)
+    // ...and names the operator for the corpus-sized case
+    assert("""\bDedup\.contaminationAttribution\b""".r
+        .findFirstIn(e.getMessage).nonEmpty,
+      s"diagnostic names no corpus-scale operator: ${e.getMessage}")
   }
 }

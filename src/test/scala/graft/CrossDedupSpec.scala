@@ -12,8 +12,9 @@ import graft.ext.Dedup
   * exactly AND the overall agreeing-hash fraction clears the threshold.
   * The oracle query `dedup_cross_minhash` pins the portable twin against
   * DuckDB at fixed SFs; this spec pins the production path on randomized
-  * adversarial shapes (empty docs, exact cross-corpus duplicates, both
-  * join modes).
+  * adversarial shapes (empty docs, exact cross-corpus duplicates) and
+  * each operator's join: broadcast-hash against a benchmark, shuffle-hash
+  * against a persisted signature index.
   */
 class CrossDedupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -54,20 +55,20 @@ class CrossDedupSpec extends AnyFunSuite {
     }.toSet
   }
 
-  test("minHashCrossPairs == naive signature model (both join modes)") {
+  test("minHashCrossPairs == naive signature model; broadcast-hash join") {
     for (seed <- Seq(7, 21)) {
       val docs = randomCorpus(seed, 40)
       val corpus = docs.filter(col("doc_id") % 2 === 0)
       val bench = docs.filter(col("doc_id") % 2 === 1)
       val expected = naiveCross(corpus, bench, 0.5, 16, 4)
-      for (bcast <- Seq(true, false)) {
-        val got = Dedup.minHashCrossPairs(corpus, bench, "doc_id", "doc_id",
-            "text", "text", threshold = 0.5, numHashes = 16, bands = 4,
-            broadcastBenchmark = bcast)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-          .toSet
-        assert(got === expected, s"seed=$seed broadcast=$bcast")
-      }
+      val pairs = Dedup.minHashCrossPairs(corpus, bench, "doc_id", "doc_id",
+          "text", "text", threshold = 0.5, numHashes = 16, bands = 4)
+      val got = pairs.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(got === expected, s"seed=$seed")
+      val plan = pairs.queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin"),
+        s"benchmark buckets do not broadcast:\n$plan")
     }
   }
 
@@ -122,13 +123,14 @@ class CrossDedupSpec extends AnyFunSuite {
     val expected = Dedup.minHashCrossPairs(shard, history, "doc_id", "doc_id",
         "text", "text", threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    for (bcast <- Seq(false, true)) {
-      val got = Dedup.minHashCrossPairsFromSignatures(shard, sigs,
-          "doc_id", "doc_id", "text", threshold = 0.5,
-          broadcastSignatures = bcast)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(got === expected, s"broadcastSignatures=$bcast")
-    }
+    val pairs = Dedup.minHashCrossPairsFromSignatures(shard, sigs,
+        "doc_id", "doc_id", "text", threshold = 0.5)
+    val got = pairs.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(got === expected)
+    val plan = pairs.queryExecution.executedPlan.toString
+    assert(plan.contains("ShuffledHashJoin"),
+      s"signature-index join is not shuffle-hash:\n$plan")
     // increment semantics: shard minus history hits minus pair-larger ids
     val historyHits = expected.map(_._1)
     val withinDrops = Dedup.minHashNearDuplicates(shard, "doc_id", "text",

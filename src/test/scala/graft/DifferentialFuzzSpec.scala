@@ -351,7 +351,7 @@ class DifferentialFuzzSpec extends DifferentialFuzz {
       val got = Sampling.stratifiedSample(
           rows.toDF("row_id", "key", "stratum"),
           col("key"), col("stratum"),
-          Seq("a" -> ra, "b" -> rb), dflt, portable = true)
+          Seq("a" -> ra, "b" -> rb), dflt)
         .select("row_id").as[Long].collect().toSet
       got == model
     })

@@ -282,19 +282,6 @@ class ExtSpec extends AnyFunSuite {
     val se = math.sqrt((1.0 / 3) * (2.0 / 3) / 256)
     assert(math.abs(est._3 - 1.0 / 3) < 4 * se,
       s"KMV estimate ${est._3} too far from 1/3 (se=$se)")
-    // production hash (xxhash64): exact when k covers the union — the
-    // hash order is irrelevant there — and within the same error bound
-    // on the sketch fixture
-    val exactProd = graft.ext.Dedup.corpusOverlapEstimate(
-        a, b, "text", "text", shingleLen = 3, k = 256, portable = false)
-      .as[(Long, Long, Double, Double, Double)].head()
-    assert(exactProd == ((5L, 1L, 0.2, 0.333333, 0.333333)))
-    val estProd = graft.ext.Dedup.corpusOverlapEstimate(
-        bigA, bigB, "text", "text", shingleLen = 3, k = 256,
-        portable = false)
-      .as[(Long, Long, Double, Double, Double)].head()
-    assert(math.abs(estProd._3 - 1.0 / 3) < 4 * se,
-      s"production KMV estimate ${estProd._3} too far from 1/3")
     // a side with no shingles (all texts shorter than shingleLen) must
     // coalesce its 0/0 containment to 0.0, never a null (advice r15)
     val emptySide = Seq((9L, "too short")).toDF("doc_id", "text")

@@ -126,5 +126,7 @@ class IntervalJoinSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin")
       && !plan.contains("CartesianProduct"),
       s"interval join fell back to a nested loop:\n$plan")
+    assert(plan.contains("ShuffledHashJoin"),
+      s"interval pair join is not shuffle-hash:\n$plan")
   }
 }

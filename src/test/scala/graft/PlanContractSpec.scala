@@ -282,8 +282,7 @@ class PlanContractSpec extends AnyFunSuite {
     val p = graft.ext.Dedup.contaminationAttribution(
         docs.filter(org.apache.spark.sql.functions.col("doc_id") % 2 === 0),
         docs.filter(org.apache.spark.sql.functions.col("doc_id") % 2 === 1),
-        "doc_id", "doc_id", "text", "text",
-        broadcastBenchmark = false, assumeUniqueBenchIds = true)
+        "doc_id", "doc_id", "text", "text")
       .queryExecution.executedPlan.toString
     assert(p.contains("ShuffledHashJoin"),
       s"held-out attribution gram join is not shuffle-hash:\n$p")

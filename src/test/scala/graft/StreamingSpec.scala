@@ -399,6 +399,20 @@ class StreamingSpec extends AnyFunSuite {
     assert(ok.count() == 1L)
   }
 
+  test("fuzzy gate rejects an oversized benchmark side, naming the " +
+      "corpus-scale operators") {
+    val docs = Seq((0L, "a b c d")).toDF("doc_id", "text")
+    val big = Seq.tabulate(5)(i => (i.toLong, s"tok$i x$i y$i z$i"))
+      .toDF("bench_id", "text")
+    val e = intercept[IllegalArgumentException](
+      graft.streaming.FuzzyContaminationGate.withMaxSimilarity(
+        docs, big, "text", "text", maxBenchmarkSigs = 2))
+    assert(e.getMessage.contains("benchmark side"))
+    assert(e.getMessage.contains("writeSignatures") &&
+      e.getMessage.contains("minHashCrossPairsFromSignatures"),
+      s"diagnostic names no corpus-scale operator: ${e.getMessage}")
+  }
+
   test("PII redaction runs unchanged on a stream, matching batch") {
     // Redaction is chained map-only regex expressions — stateless and
     // watermark-free, so the SAME gate code serves batch curation and a
