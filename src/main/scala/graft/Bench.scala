@@ -1,4 +1,7 @@
 package graft
+
+import graft.internal.{Run, RunRecorder}
+
 object Bench {
 
   /** FROZEN round-15 bench membership (the 158 queries BENCH_r15
@@ -131,17 +134,23 @@ object Bench {
     // blocks a query leaked (lazy localCheckpoints materialized by a cold
     // run of a non-eager query, a training persist whose paired unpersist
     // a failure path skipped) at the END of its measurement block — 181
-    // queries × 6 executions otherwise accumulate dead blocks the whole
+    // queries × 4 executions otherwise accumulate dead blocks the whole
     // run, the §5 heap-pressure theory for the r19 trailing-segment stall.
     // Always OUTSIDE every timed window; within-query reuse is unaffected
     // because the sweep runs after the query's last execution.
     // per-query post-GC heap telemetry (same ask: memory-over-run evidence)
     val heapMb = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    // rows dropped by caps per query, summed over its recorded executions
+    val drops = scala.collection.mutable.TreeMap.empty[String, Long]
+    // run `body` under the recorder; its drops count towards `name`
+    def recorded[A](name: String)(body: => A): (A, Run) = {
+      val (a, run) = RunRecorder.record(spark)(body)
+      if (run.drops > 0) drops(name) = drops.getOrElse(name, 0L) + run.drops
+      (a, run)
+    }
     val results = selected.map { case (name, fn) =>
-      // attribute this query's capped-operator drops in the round table
-      graft.ext.DropMetrics.setContext(name)
       val rddsAtQueryStart = spark.sparkContext.getPersistentRDDs.keySet
-      val coldRun = timed(s"$name cold")(fn(spark, sfDir).count())
+      val (coldRun, _) = recorded(name)(timed(s"$name cold")(fn(spark, sfDir).count()))
       coldRun.left.foreach(failedCold(name) = _)
       val cold = coldRun.getOrElse(-1.0)
       val coldOk = coldRun.isRight
@@ -180,25 +189,22 @@ object Bench {
         case Some(p) => p.clone().execute().count()
         case None => fn(spark, sfDir).count()
       }
-      val runs = (1 to reps).map(_ => timed(name)(warmRun()))
+      val recordedRuns = (1 to reps).map(_ => recorded(name)(timed(name)(warmRun())))
+      val runs = recordedRuns.map(_._1)
       runs.collectFirst { case Left(r) => r }.foreach(failedWarm(name) = _)
       val median = medianOf(runs.collect { case Right(t) => t })
-      // job/stage audit (one extra untimed execution of the warm body):
-      // a sub-0.2 s query paying 4-23× vs DuckDB is paying Spark's per-JOB
+      // jobs and stages of the last timed rep (the steady state the
+      // median reads; a clone's first run can pay one more job): a
+      // sub-0.2 s query paying 4-23× vs DuckDB is paying Spark's per-JOB
       // floor — this count is the denominator of that tail, so regressions
       // in action count (a new eager subquery, an accidental checkpoint)
       // surface as a number, not a vibe
-      val tracker = spark.sparkContext.statusTracker
-      val jobsBefore = tracker.getJobIdsForGroup(null).toSet
-      try warmRun() catch { case _: Throwable => () }
-      val jobIds = tracker.getJobIdsForGroup(null).toSet -- jobsBefore
-      val nStages = jobIds.toSeq
-        .flatMap(id => tracker.getJobInfo(id).map(_.stageIds.length)).sum
+      val audit = recordedRuns.last._2
       // leak sweep (see the stall-guard note above): anything persisted since this
-      // query began and still alive now was leaked by one of its untimed
+      // query began and still alive now was leaked by one of its
       // executions — release it before the next query measures
       releaseSince(rddsAtQueryStart)
-      name -> (median, cold, jobIds.size, nStages)
+      name -> (median, cold, audit.jobs.size, audit.stageCount)
     }
     val aqeMain = spark.conf.get("spark.sql.adaptive.enabled").toBoolean
     // ——— batched sub-floor posture ———
@@ -256,10 +262,9 @@ object Bench {
         // stages — fake), so rep 1 pays the compile, the median of 3
         // reads the warm steady state.
         selected.map { case (name, fn) =>
-          graft.ext.DropMetrics.setContext(name)
           val rddsAt = spark.sparkContext.getPersistentRDDs.keySet
           val runs = (1 to reps).map { _ =>
-            timed(s"$name under AQE")(fn(spark, sfDir).count())
+            recorded(name)(timed(s"$name under AQE")(fn(spark, sfDir).count()))._1
           }
           releaseSince(rddsAt)
           runs.collectFirst { case Left(r) => r }.foreach(failedAqe(name) = _)
@@ -331,27 +336,17 @@ object Bench {
       else s""","total_aqe":$totalAqe,""" +
         s""""queries_aqe":${jsonMap(aqeQueries)}"""
     // round-level "rows dropped by caps" table (no-silent-caps audit):
-    // flush the async listener bus first so every execution's observed
-    // metrics have landed. Totals span ALL of a query's executions this
-    // run (warmup + reps + audits) — an order-of-magnitude lens, not a
-    // per-run ledger (each execution's exact counts are in the WARN log).
-    // flush BEFORE clearing: listener delivery is async, so a clear that
-    // races the last query's events would drop their attribution
-    try org.apache.spark.sql.GraftColumnBridge.flushListenerBus(spark)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] listener-bus flush failed: ${e.getMessage}")
-    }
-    graft.ext.DropMetrics.clearContext()
-    val dropTable = graft.ext.DropMetrics.drainTotals()
-    if (dropTable.isEmpty)
+    // each query's drops over its recorded executions (cold, warm reps,
+    // AQE reps); each execution's own counts are in the WARN log
+    if (drops.isEmpty)
       System.err.println(
         "[bench] rows dropped by caps: none observed this run")
-    else dropTable.foreach { case (q, n) =>
+    else drops.foreach { case (q, n) =>
       System.err.println(s"[bench] rows dropped by caps: $q total=$n")
     }
     val dropsJson =
-      if (dropTable.isEmpty) ""
-      else dropTable.map { case (q, n) => s"\"$q\":$n" }
+      if (drops.isEmpty) ""
+      else drops.map { case (q, n) => s"\"$q\":$n" }
         .mkString(""","drops":{""", ",", "}")
     // post-GC heap after each query's warmup (memory-over-run evidence for
     // the stall-guard ask; flat ⇒ no block/heap accumulation across the run)

@@ -3546,9 +3546,8 @@ object SparkEntry {
       : (String, (SparkSession, String) => DataFrame) =
     name -> ((s: SparkSession, dir: String) =>
       queryCache.get(s, (name, dir)).getOrElse {
-        val (df, executions) =
-          graft.internal.SqlExecutionProbe.count(s)(f(s, dir))
-        if (executions == 0 && !hasRddLeaf(df))
+        val (df, run) = graft.internal.RunRecorder.record(s)(f(s, dir))
+        if (run.executions == 0 && !hasRddLeaf(df))
           queryCache.getOrBuild(s, (name, dir))(df)
         else df
       })

@@ -1,7 +1,16 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
+
+import graft.internal.RunRecorder
 /** Correctness dump: each [[Harness.selected]] query's result → parquet,
-  * plus oracle_sql.json, for the DuckDB compare (scripts/check_oracle.py),
+  * its content hash → result_hashes.json (one line per query, sorted, so
+  * two runs compare with `diff`), plus oracle_sql.json, for the DuckDB
+  * compare (scripts/check_oracle.py),
   * in the [[Harness.session]] posture (`SPARK_GRAFT_AQE=true` is the AQE-on
   * robustness sweep: every query's VALUES must survive adaptive
   * re-planning). Usage: `Verify <sfDir> <outDir>`. Exits 2 when a query
@@ -20,6 +29,15 @@ object Verify {
     case c => c.toString
   } + "\""
 
+  /** Order-independent content hash of a result, computed in Spark with no
+    * rows collected: the row count, then the wrapping (ANSI off) sum of
+    * each row's `xxhash64` over the columns in name order. */
+  def resultHash(df: DataFrame): String = {
+    val cols = df.columns.sorted.map(c => col(s"`${c.replace("`", "``")}`"))
+    val r = df.agg(count(lit(1)), sum(xxhash64(cols.toIndexedSeq: _*))).head()
+    f"${r.getLong(0)}%d:${if (r.isNullAt(1)) 0L else r.getLong(1)}%016x"
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val selected = Harness.selected()
@@ -27,28 +45,30 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // a query that throws is recorded and the run goes on, so every other
     // output still lands; the run then exits non-zero naming them
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    val failed = mutable.LinkedHashSet.empty[String]
+    // rows dropped by caps per query, over its recorded executions
+    val drops = mutable.TreeMap.empty[String, Long]
     def attempt[T](name: String)(body: => T): Option[T] =
-      try Some(body)
-      catch { case e: Throwable =>
+      try {
+        val (r, run) = RunRecorder.record(spark)(body)
+        if (run.drops > 0) drops(name) = drops.getOrElse(name, 0L) + run.drops
+        Some(r)
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failed += name
         None
       }
+    val hashes = mutable.TreeMap.empty[String, String]
     SparkEntry.queries.foreach { case (name, fn) =>
-      if (selected(name)) {
-        graft.ext.DropMetrics.setContext(name)
-        attempt(name)(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name"))
-        // flush PER QUERY, not only at drain time: execution-end events
-        // are async, so a capped operator's drop metric could otherwise
-        // land in the NEXT query's context (observed at sf1.0:
-        // dedup_simhash_pairs' second execution attributed 40470 drops
-        // to whichever query followed it in map order)
-        try org.apache.spark.sql.GraftColumnBridge.flushListenerBus(spark)
-        catch { case _: Throwable => () }
-      }
+      if (selected(name)) attempt(name) {
+        val path = s"$outDir/$name"
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(path)
+        resultHash(spark.read.parquet(path))
+      }.foreach(hashes(name) = _)
     }
+    Files.writeString(Paths.get(s"$outDir/result_hashes.json"), hashes
+      .map { case (n, h) => s"${jsonString(n)}: ${jsonString(h)}" }
+      .mkString("{\n", ",\n", "\n}\n"))
     // self-oracle for the queries DuckDB cannot replay (engine-specific
     // hash kernels): content hash vs committed golden → golden_check.json
     // next to the parquet dumps. GOLDEN FAIL lines are the regression
@@ -60,7 +80,6 @@ object Verify {
     val goldenNames = GoldenHashes.queries.filter(n => selected(n) && !failed(n))
     val goldenRows = goldenNames.flatMap { name =>
       SparkEntry.queries.get(name).flatMap { fn =>
-        graft.ext.DropMetrics.setContext(name)
         attempt(name)(GoldenHashes.check(name, sfKey, fn(spark, sfDir)))
       }.map { case (hash, exp, ok) =>
         val status =
@@ -86,18 +105,10 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/query_sets.json"),
       s"""{"frozen_r15": ${names(Bench.frozenR15)}, """ +
         s""""naive_oracle_replay": ${names(SparkEntry.naiveOracleReplay)}}""")
-    // round-level "rows dropped by caps" table (no-silent-caps audit) —
-    // flush the async listener bus BEFORE clearing the context so every
-    // execution's metrics land attributed
-    try org.apache.spark.sql.GraftColumnBridge.flushListenerBus(spark)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] listener-bus flush failed: ${e.getMessage}")
-    }
-    graft.ext.DropMetrics.clearContext()
-    val dropTable = graft.ext.DropMetrics.drainTotals()
-    if (dropTable.isEmpty)
+    // round-level "rows dropped by caps" table (no-silent-caps audit)
+    if (drops.isEmpty)
       println("DROPS none (no capped-operator drops observed this run)")
-    else dropTable.foreach { case (name, n) => println(s"DROPS $name: $n") }
+    else drops.foreach { case (name, n) => println(s"DROPS $name: $n") }
     spark.stop()
     // a query that threw has no value to compare: exit 2, ahead of the
     // golden check. A golden mismatch is a VALUE regression in a

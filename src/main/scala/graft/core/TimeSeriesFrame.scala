@@ -88,9 +88,6 @@ final case class TimeSeriesFrame(df: DataFrame, schema: TsSchema) {
     copy(df = df.withColumn(schema.tsCol, date_format(col(schema.tsCol), jdk)))
   }
 
-  def withSurrogateKey(orderCol: String): TimeSeriesFrame =
-    copy(df = TimeSeriesOps.addSurrogateKey(df, schema.itemIdCols, orderCol))
-
   def resampleSum(unit: String = "day"): TimeSeriesFrame =
     copy(df = TimeSeriesOps.resampleSum(df, id, schema.tsCol, schema.numericCols, unit))
 

@@ -2,17 +2,15 @@ package graft.ext
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
-import org.slf4j.LoggerFactory
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Lazy drop accounting for capped operators (LSH bucket caps, stop-shingle
   * drops). `observe` plants a `CollectMetrics` node in the plan — metrics are
   * accumulated as a side effect of whatever job eventually runs the query, so
-  * the accounting adds NO extra job and no extra pass over the data. A
-  * once-per-session [[QueryExecutionListener]] turns any non-zero drop count
-  * into a WARN log line, so capping is never silent truncation.
+  * the accounting adds NO extra job and no extra pass over the data. The
+  * context's [[graft.internal.RunRecorder]] turns any non-zero drop count
+  * into a WARN log line, so capping is never silent truncation, and adds it
+  * to the run of whichever recorded block executed the query.
   *
   * Names are uniquified per call-site instantiation: two capped operators in
   * one query must not collide (same observation name with different plans is
@@ -23,66 +21,14 @@ import org.slf4j.LoggerFactory
   * to re-running the bucket-count aggregation.
   */
 object DropMetrics {
-  private val log = LoggerFactory.getLogger(getClass)
   private val seq = new AtomicLong()
-  private val registered = java.util.Collections.newSetFromMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  // ——— round-level drop table (Bench/Verify auditability) ———
-  // Per-context (= per running query) totals of every observed non-zero
-  // drop count, so a harness run can print ONE "rows dropped by caps"
-  // table instead of scattering WARN lines through the log. Listener
-  // delivery is async and the Bench body executes each query several
-  // times (warmup + reps + audits), so the table is an audit LENS —
-  // zero-vs-nonzero and order of magnitude — not an exact per-run ledger.
-  private val totals =
-    new java.util.concurrent.ConcurrentHashMap[String, AtomicLong]()
-  @volatile private var currentContext: String = null
-
-  /** Attribute subsequently observed drops to `name`. */
-  def setContext(name: String): Unit = currentContext = name
-  def clearContext(): Unit = currentContext = null
-
-  /** Snapshot and reset the per-context drop totals (sorted by context). */
-  def drainTotals(): Seq[(String, Long)] = {
-    val out = scala.collection.mutable.ArrayBuffer[(String, Long)]()
-    val it = totals.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next(); out += ((e.getKey, e.getValue.get()))
-    }
-    totals.clear()
-    out.sortBy(_._1).toSeq
-  }
 
   /** Attach drop metrics to `df` under a unique `graft_drops_<tag>_<n>`
     * observation and ensure the logging listener is installed. The first
     * metric column should be the drop count; all are logged on >0 drops. */
   def observe(df: DataFrame, tag: String, metrics: Seq[Column]): DataFrame = {
-    ensureListener(df.sparkSession)
+    graft.internal.RunRecorder.install(df.sparkSession)
     df.observe(s"graft_drops_${tag}_${seq.incrementAndGet()}",
       metrics.head, metrics.tail: _*)
-  }
-
-  private def ensureListener(spark: SparkSession): Unit = registered.synchronized {
-    if (registered.add(spark)) {
-      spark.listenerManager.register(new QueryExecutionListener {
-        override def onSuccess(funcName: String, qe: QueryExecution,
-            durationNs: Long): Unit =
-          qe.observedMetrics.foreach { case (name, row) =>
-            if (name.startsWith("graft_drops_") && row.size > 0 &&
-                !row.isNullAt(0) && row.getLong(0) > 0) {
-              val detail = row.schema.fieldNames.zipWithIndex
-                .map { case (f, i) => s"$f=${row.get(i)}" }.mkString(", ")
-              log.warn(s"[$name] capped operator dropped rows: $detail")
-              val ctx = currentContext
-              if (ctx != null)
-                totals.computeIfAbsent(ctx, _ => new AtomicLong())
-                  .addAndGet(row.getLong(0))
-            }
-          }
-        override def onFailure(funcName: String, qe: QueryExecution,
-            exception: Exception): Unit = ()
-      })
-    }
   }
 }

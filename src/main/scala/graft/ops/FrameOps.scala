@@ -31,11 +31,6 @@ object FrameOps {
   def fillNulls(df: DataFrame, cols: Seq[String], value: Double = 0.0): DataFrame =
     df.na.fill(value, cols)
 
-  /** P7 — constant column append (`outcome=0` dummy,
-    * synthcity_adapter.py:239-243). */
-  def withConstant(df: DataFrame, name: String, value: Any): DataFrame =
-    df.withColumn(name, lit(value))
-
   /** F4 — `pd.date_range(start, end, freq, inclusive)` equivalent
     * (data_utils.py:51-59): one-column calendar DataFrame with the
     * reference's four inclusivity modes. */

@@ -88,23 +88,4 @@ object GraftArrowBridge {
     }
     s.internalCreateDataFrame(rows, schema)
   }
-
-  /** Parse serialized Arrow record batches back into a DataFrame of
-    * `schema` (the inverse of [[toBatchRdd]] for an unchanged schema, or
-    * the re-entry point for a worker that emitted a new schema). */
-  def fromBatchRdd(
-      spark: SparkSession,
-      batches: RDD[Array[Byte]],
-      schema: StructType): DataFrame = {
-    val s = spark.asInstanceOf[classic.SparkSession]
-    val timeZone = s.sessionState.conf.sessionLocalTimeZone
-    val rows = batches.mapPartitions { it =>
-      ArrowConverters.fromBatchIterator(
-        it, schema, timeZone,
-        true,  // errorOnDuplicatedFieldNames
-        false, // largeVarTypes
-        TaskContext.get())
-    }
-    s.internalCreateDataFrame(rows, schema)
-  }
 }

@@ -34,12 +34,20 @@ object GraftColumnBridge {
     case other => String.valueOf(System.identityHashCode(other))
   }
 
-  /** Drain the listener bus (`listenerBus` is `private[spark]`): harness
-    * mains flush it before reading [[graft.ext.DropMetrics]]' async
-    * per-query totals, Profile fences its listener attach/detach with it,
-    * and [[graft.internal.SqlExecutionProbe]] reads its counts after it. */
+  /** Drain the listener bus (`listenerBus` is `private[spark]`):
+    * [[graft.internal.RunRecorder.record]] drains it once before it reads
+    * a block's run. */
   def flushListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The observed metrics (`Dataset.observe`) of a SQL execution that
+    * succeeded (the event's `qe` and failure are `private[sql]`); empty
+    * for a failed one. */
+  def observedMetrics(
+      e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd)
+      : Map[String, Row] =
+    if (e.qe == null || e.executionFailure.isDefined) Map.empty
+    else e.qe.observedMetrics
 
   /** Build a DataFrame over a custom logical plan node (the (c)-ladder
     * entry point: `Dataset.ofRows` is `private[sql]`). */

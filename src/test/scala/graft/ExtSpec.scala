@@ -9,28 +9,46 @@ class ExtSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  // ——— DropMetrics round table ———
+  // ——— DropMetrics through the run recorder ———
 
-  test("DropMetrics attributes observed drops to the active context and " +
-      "drains a per-query total (the bench/verify drop table)") {
-    import graft.ext.DropMetrics
-    DropMetrics.drainTotals() // isolate from any earlier suite's drops
-    DropMetrics.setContext("q_spec_drops")
-    // a capped operator's observe shape: first metric = drop count
-    val df = DropMetrics.observe(
-      (1 to 7).toDF("v"), "spec",
-      Seq(sum(when(col("v") > 4, 1L).otherwise(0L)).as("dropped_rows"),
-        count(lit(1)).as("n")))
-    assert(df.count() == 7) // observe never changes the data
-    df.count() // second execution accumulates again
-    // flush BEFORE clearing: listener delivery is async, so a clear that
-    // races the last event would drop its attribution
-    org.apache.spark.sql.GraftColumnBridge.flushListenerBus(spark)
-    DropMetrics.clearContext()
-    val table = DropMetrics.drainTotals().toMap
-    assert(table.get("q_spec_drops").contains(6L), s"got $table") // 3 + 3
-    // drained: the next snapshot is empty
-    assert(DropMetrics.drainTotals().isEmpty)
+  // a capped operator's observe shape: first metric = drop count
+  private def capped(n: Int, over: Int) = graft.ext.DropMetrics.observe(
+    (1 to n).toDF("v"), "spec",
+    Seq(sum(when(col("v") > over, 1L).otherwise(0L)).as("dropped_rows"),
+      count(lit(1)).as("n")))
+
+  test("record attributes observed drops to its run; a nested record counts in both") {
+    import graft.internal.RunRecorder
+    val df = capped(7, 4)
+    val ((n, inner), outer) = RunRecorder.record(spark) {
+      val n = df.count() // observe never changes the data
+      (n, RunRecorder.record(spark)(df.count())._2) // accumulates again
+    }
+    assert(n == 7)
+    assert(outer.drops == 6L, s"got $outer") // 3 + 3
+    assert(outer.executions == 2)
+    assert(inner.drops == 3L && inner.executions == 1, s"got $inner")
+    assert(outer.jobs.map(_.id).containsSlice(inner.jobs.map(_.id)))
+  }
+
+  test("two threads recording at once each get exactly their own drops") {
+    import graft.internal.{Run, RunRecorder}
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    val runs = new java.util.concurrent.ConcurrentHashMap[Int, Run]()
+    // 200 rows: over 150 drops 50 per execution, over 180 drops 20
+    val threads = Seq(150, 180).map { over =>
+      new Thread(() => {
+        val df = capped(200, over)
+        start.await()
+        runs.put(over, RunRecorder.record(spark)((1 to 4).foreach(_ => df.count()))._2)
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join(120000L))
+    assert(runs.get(150) != null && runs.get(180) != null, s"got $runs")
+    assert(runs.get(150).drops == 200L, s"got ${runs.get(150)}") // 4 x 50
+    assert(runs.get(180).drops == 80L, s"got ${runs.get(180)}") // 4 x 20
+    assert(runs.get(150).executions == 4 && runs.get(180).executions == 4)
   }
 
   // ——— Dedup ———

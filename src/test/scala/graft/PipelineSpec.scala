@@ -70,7 +70,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("EvaluationPipeline.fit starts no SQL execution to pick the best generator") {
-    import graft.internal.SqlExecutionProbe
+    import graft.internal.RunRecorder
     import graft.pipeline.Scorer
     import graft.providers.FittedGenerator
     import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -92,9 +92,9 @@ class PipelineSpec extends AnyFunSuite {
     val pipeline = new EvaluationPipeline(
       scala.collection.immutable.ListMap("p" -> stub, "q" -> stub, "r" -> stub),
       counting, iterations = 2)
-    val (result, executions) = SqlExecutionProbe.count(spark)(pipeline.fit(sampleData, schema))
+    val (result, run) = RunRecorder.record(spark)(pipeline.fit(sampleData, schema))
     assert(calls == 6)
-    assert(executions == 0) // neither the scorer nor the provider runs one
+    assert(run.executions == 0) // neither the scorer nor the provider runs one
     assert(result.bestGenerator.contains("q")) // means p 2.0, q 1.75, r 2.25
     assert(Metrics.bestGenerator(result.metrics, "mae") == result.bestGenerator)
   }

@@ -201,11 +201,11 @@ class TimeSeriesOpsSpec extends AnyFunSuite {
   }
 
   test("normalise_sequences runs one SQL execution for its metadata") {
-    import graft.internal.SqlExecutionProbe
+    import graft.internal.RunRecorder
     val df = metaInput(5, 30, 0.1, ghost = true)
-    val (res, n) = SqlExecutionProbe.count(spark)(
+    val (res, run) = RunRecorder.record(spark)(
       TimeSeriesOps.normaliseSequences(df, Seq("a", "b"), "ts", Seq("v"), "ord"))
-    assert(n == 1)
+    assert(run.executions == 1)
     assert(res.numSequences > 0 && res.seqLen > 0)
   }
 
