@@ -1,8 +1,50 @@
 package graft
 
+import java.util.IdentityHashMap
+
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.{BaseSubqueryExec, ExecSubqueryExpression, SparkPlan}
+import org.apache.spark.sql.types.DataType
+
 import graft.internal.{Run, RunRecorder}
 
 object Bench {
+
+  /** A copy of the executed plan `p` that runs every job again.
+    * `clone()` copies child nodes only: expressions, and the exchange a
+    * `ReusedExchange` points at, stay shared with `p`. A subquery
+    * expression's plan (a scalar subquery, an injected runtime filter)
+    * and an exchange keep their result once run, so every clone after
+    * the first skipped those jobs. Here every node is copied once per
+    * call, by identity, so what `p` reuses stays shared within the copy.
+    * Nodes are rebuilt with `makeCopy`: Catalyst's transforms keep the
+    * old node whenever the new one is `==` to it, and a copy is. */
+  def freshCopy(p: SparkPlan): SparkPlan = {
+    val copies = new IdentityHashMap[SparkPlan, SparkPlan]()
+    // the argument shapes Catalyst's own expression mapping walks
+    def arg(a: Any): Any = a match {
+      case q: SparkPlan => plan(q)
+      case e: Expression => expression(e)
+      case d: DataType => d // a StructType is a Seq
+      case Some(v) => Some(arg(v))
+      case (x, y) => (arg(x), arg(y))
+      case s: Seq[_] => s.map(arg)
+      case other => other
+    }
+    def expression(e: Expression): Expression = e match {
+      case s: ExecSubqueryExpression =>
+        s.withNewPlan(plan(s.plan).asInstanceOf[BaseSubqueryExec])
+      case _ if e.exists(_.isInstanceOf[ExecSubqueryExpression]) => e.makeCopy(args(e))
+      case _ => e
+    }
+    def plan(q: SparkPlan): SparkPlan = Option(copies.get(q)).getOrElse {
+      val c = q.makeCopy(args(q))
+      copies.put(q, c)
+      c
+    }
+    def args(n: Product): Array[AnyRef] = n.productIterator.map(arg(_).asInstanceOf[AnyRef]).toArray
+    plan(p)
+  }
 
   /** FROZEN round-15 bench membership (the 158 queries BENCH_r15
     * measured) — the fixed denominator for round-over-round trend
@@ -81,8 +123,8 @@ object Bench {
     //    + analysis + optimization + physical planning + codegen + execution.
     //    One shot by nature (later calls hit the session memo).
     //  * warm (headline "queries") — steady-state repetition: the
-    //    once-planned physical count plan is deep-CLONED per rep and the
-    //    clone executed, so EVERY stage re-executes (fresh exchange node
+    //    once-planned physical count plan is copied per rep (freshCopy)
+    //    and the copy executed, so EVERY stage re-executes (fresh exchange node
     //    instances = fresh shuffle dependencies and a fresh broadcast
     //    build — no DAGScheduler map-output reuse; re-counting a cached
     //    RDD would skip map stages entirely and be fake), while
@@ -186,19 +228,19 @@ object Bench {
       val rt = Runtime.getRuntime
       heapMb(name) = (rt.totalMemory - rt.freeMemory) >> 20
       def warmRun(): Long = planned match {
-        case Some(p) => p.clone().execute().count()
+        case Some(p) => freshCopy(p).execute().count()
         case None => fn(spark, sfDir).count()
       }
       val recordedRuns = (1 to reps).map(_ => recorded(name)(timed(name)(warmRun())))
       val runs = recordedRuns.map(_._1)
       runs.collectFirst { case Left(r) => r }.foreach(failedWarm(name) = _)
       val median = medianOf(runs.collect { case Right(t) => t })
-      // jobs and stages of the last timed rep (the steady state the
-      // median reads; a clone's first run can pay one more job): a
-      // sub-0.2 s query paying 4-23× vs DuckDB is paying Spark's per-JOB
-      // floor — this count is the denominator of that tail, so regressions
-      // in action count (a new eager subquery, an accidental checkpoint)
-      // surface as a number, not a vibe
+      // jobs and stages of the last timed rep (every rep runs the same
+      // jobs, see freshCopy): a sub-0.2 s query paying
+      // 4-23× vs DuckDB is paying Spark's per-JOB floor — this count is
+      // the denominator of that tail, so regressions in action count (a
+      // new eager subquery, an accidental checkpoint) surface as a
+      // number, not a vibe
       val audit = recordedRuns.last._2
       // leak sweep (see the stall-guard note above): anything persisted since this
       // query began and still alive now was leaked by one of its
@@ -229,11 +271,11 @@ object Bench {
               org.apache.spark.sql.functions.col("count").as("n"))
         }.reduce(_ unionByName _)
         val planned = union.queryExecution.executedPlan
-        planned.clone().execute().count() // untimed warmup
+        freshCopy(planned).execute().count() // untimed warmup
         System.gc()
         val ts = (1 to reps).map { _ =>
           val t0 = System.nanoTime()
-          planned.clone().execute().count()
+          freshCopy(planned).execute().count()
           (System.nanoTime() - t0) / 1e9
         }
         Some(medianOf(ts))

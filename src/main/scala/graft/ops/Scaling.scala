@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** A6 + F6 — min-max scaling with exact inverse (reference:
@@ -39,16 +39,29 @@ object Scaling {
     * (reference: MinMaxScaler.fit, paqarin/adapters/ydata_adapter.py:54,223).
     */
   def fit(df: DataFrame, cols: Seq[String]): MinMaxStats = {
-    val aggs = cols.flatMap(c =>
-      Seq(min(col(c)).cast("double").as(s"__min_$c"),
-          max(col(c)).cast("double").as(s"__max_$c")))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    val aggs = bounds(cols)
+    fromBounds(cols, Seq(df.agg(aggs.head, aggs.tail: _*).head()), 0)
+  }
+
+  /** [[fit]]'s aggregates: min and max of each column, as doubles. */
+  private[graft] def bounds(cols: Seq[String]): Seq[Column] =
+    cols.flatMap(c => Seq(min(col(c)).cast("double"), max(col(c)).cast("double")))
+
+  /** The stats of [[bounds]] aggregated per group, its columns starting
+    * at `from` in every row: min of the groups' mins, max of their maxes,
+    * ordered as Spark orders doubles (NaN above every other value). One
+    * row is [[fit]] itself. */
+  private[graft] def fromBounds(cols: Seq[String], rows: Seq[Row], from: Int): MinMaxStats = {
+    def lt(a: Double, b: Double) = a < b || (!a.isNaN && b.isNaN)
+    def values(at: Int) = rows.filterNot(_.isNullAt(at)).map(_.getDouble(at))
     MinMaxStats(cols.zipWithIndex.map { case (c, i) =>
+      val (los, his) = (values(from + 2 * i), values(from + 2 * i + 1))
       // an entirely-null column aggregates to SQL NULL — fail loudly
       // instead of silently fitting a (0.0, 0.0) scaler
-      require(!row.isNullAt(2 * i) && !row.isNullAt(2 * i + 1),
+      require(los.nonEmpty && his.nonEmpty,
         s"Scaling.fit: column '$c' has no non-null values")
-      c -> (row.getDouble(2 * i), row.getDouble(2 * i + 1))
+      c -> (los.reduce((a, b) => if (lt(b, a)) b else a),
+        his.reduce((a, b) => if (lt(a, b)) b else a))
     }.toMap)
   }
 

@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.nio.charset.StandardCharsets
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The reference's dataflow operator surface (SURVEY.md §2) re-expressed as
   * pure `DataFrame => DataFrame` transformations, Spark-first.
@@ -157,7 +160,9 @@ object TimeSeriesOps {
     * the corpus has 10³ or 10⁹ entities (the previous formulation
     * collected one row per entity — a driver OOM at 10⁹). Equivalent to
     * `row_number() over (order by entity, pos)` − 1.
-    * `posCol` must be dense 0-based within each entity.
+    * `posCol` must be dense 0-based within each entity. A caller that
+    * only needs the rows from some position on, over few entities, needs
+    * no position column: [[entityCounts]] and [[positionalTail]].
     */
   def globalPosition(
       df: DataFrame,
@@ -216,6 +221,66 @@ object TimeSeriesOps {
       .withColumn(outCol, col("__offset") + col(posCol))
       .drop("__gpk", "__offset")
     (positioned, acc)
+  }
+
+  /** Above this many entities, [[entityCounts]] gives up: the counts
+    * stay distributed ([[globalPositionWithCount]]). */
+  private val DriverEntityCap = 1 << 14
+
+  /** The per-entity row count of `df`, followed by `aggs` per entity, on
+    * the driver in Spark's `orderBy(idCol)` order (nulls first; UTF-8 byte
+    * order for strings): one SQL execution, `limit(cap + 1)`-bounded.
+    * None when `df` holds more than `DriverEntityCap` entities or the id
+    * type has no exact driver ordering here (only integral and binary-
+    * collated string ids do).
+    */
+  private[graft] def entityCounts(
+      df: DataFrame,
+      idCol: String,
+      aggs: Seq[Column] = Nil): Option[Seq[Row]] = {
+    val ord: Option[Ordering[Any]] = df.schema(idCol).dataType match {
+      case LongType | IntegerType | ShortType | ByteType =>
+        Some(Ordering.by((v: Any) => v.asInstanceOf[Number].longValue()))
+      case s: StringType if s.collationId == StringType.collationId =>
+        val utf8 = Ordering.comparatorToOrdering(
+          (a: Array[Byte], b: Array[Byte]) => java.util.Arrays.compareUnsigned(a, b))
+        Some(Ordering.by((v: Any) =>
+          v.asInstanceOf[String].getBytes(StandardCharsets.UTF_8))(utf8))
+      case _ => None
+    }
+    ord.flatMap { o =>
+      val rows = df.groupBy(col(idCol)).agg(count(lit(1)), aggs: _*)
+        .limit(DriverEntityCap + 1).collect()
+      if (rows.length > DriverEntityCap) None
+      else Some(rows.toSeq.sortBy(r => Option(r.get(0)))(Ordering.Option(o)))
+    }
+  }
+
+  /** The rows of `df` whose [[globalPosition]] is at least `from`, given
+    * `counts`: every entity's row count in `orderBy(idCol)` order, as
+    * [[entityCounts]] returns them. A filter, no join: the rows after the
+    * entity that holds position `from`, and that entity's rows from its
+    * local position on. The entity bound references the id alone, so it
+    * can sink below an entity-partitioned window.
+    */
+  private[graft] def positionalTail(
+      df: DataFrame,
+      idCol: String,
+      posCol: String,
+      counts: Seq[(Any, Long)],
+      from: Long): DataFrame = {
+    val ends = counts.scanLeft(0L)(_ + _._2).tail
+    val at = ends.indexWhere(_ > from)
+    if (at < 0) df.filter(lit(false))
+    else {
+      val (e, n) = counts(at)
+      val local = from - (ends(at) - n)
+      val id = col(idCol)
+      // null ids sort first: every id is at or after a null one
+      val (atOrAfter, after) =
+        if (e == null) (lit(true), id.isNotNull) else (id >= lit(e), id > lit(e))
+      df.filter(atOrAfter && (after || col(posCol) >= local))
+    }
   }
 
   /** W5 — positional train/val/test split (reference:

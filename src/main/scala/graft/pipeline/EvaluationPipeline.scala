@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.core.TsSchema
 import graft.metrics.Metrics
-import graft.ops.{Scaling, TimeSeriesOps => Ts}
 import graft.providers.{FittedGenerator, GeneratorProvider}
 
 /** Train-and-score orchestration — the reference's `EvaluationPipeline.fit`
@@ -68,14 +67,7 @@ final class PredictiveScorer(seqLen: Int = 8) extends Scorer {
   val metricKey = "mean_absolute_error"
 
   def score(real: DataFrame, model: FittedGenerator, schema: TsSchema): Double = {
-    val id = schema.itemIdCols.head
-    val stats = Scaling.fit(real, schema.numericCols)
-    val scaled = stats.transform(real)
-    val win = Ts.slidingWindows(scaled, id, schema.tsCol, schema.numericCols, seqLen)
-    val (xy, n) = Ts.globalPositionWithCount(Ts.xySplit(win), id, "__pos", "__seq")
-    val t = (0.75 * n).toLong
-    val v = t + ((n - t) / 2)
-    val test = xy.filter(col("__seq") >= v)
+    val (_, test) = RegressionScorer.realTestSplit(real, schema, seqLen)
     val errs = schema.numericCols.map(c =>
       abs(element_at(col("x"), -1)(c) - col("y")(c)))
     test

@@ -23,6 +23,11 @@ import graft.providers.FittedGenerator
   * [[RegressionScorer.fitNormal]]); every column's test error comes from
   * one more aggregate over the real test split. MLlib's `LinearRegression`
   * stays in the test tree as the oracle for both.
+  *
+  * The scaler and the real test split come first, from one per-entity
+  * aggregate over the real rows ([[RegressionScorer.realTestSplit]]), so
+  * a score of up to 2^14 entities runs three SQL executions (four for
+  * MASE, whose naive-error denominator is one more aggregate).
   */
 final class RegressionScorer(
     seqLen: Int = 8,
@@ -60,20 +65,8 @@ final class RegressionScorer(
     val spark = real.sparkSession
     val id = schema.itemIdCols.head
     val cols = schema.numericCols
-    val stats = Scaling.fit(real, cols)
-
-    // real windows -> positional test split (W5), exact int truncation;
-    // globalPosition avoids the single-partition row_number sort, and
-    // its partition totals give n without a separate count
-    val (realXy, n) = Ts.globalPositionWithCount(
-      Ts.xySplit(Ts.slidingWindows(
-        stats.transform(real), id, schema.tsCol, cols, seqLen)),
-      id, "__pos", "__seq")
-    require(n > 0, s"TSTR real test split is empty: the real series " +
-      s"has no window of $seqLen steps")
-    val t = (0.75 * n).toLong
-    val v = t + ((n - t) / 2)
-    val realTest = flatten(realXy.filter(col("__seq") >= v), cols)
+    val (stats, test) = RegressionScorer.realTestSplit(real, schema, seqLen)
+    val realTest = flatten(test, cols)
 
     // synthetic windows from the fitted generator (canonical long shape);
     // providers are fit on RAW data by the pipeline, so bring the synthetic
@@ -131,6 +124,48 @@ object RegressionScorer {
 
   /** One label's fit in the original (unstandardized) feature space. */
   final case class LinearFit(coefficients: Array[Double], intercept: Double)
+
+  /** The scaler fitted on `real` and the REAL test split of both TSTR
+    * scorers: the x/y-split windows (W1, W4) of the scaled series, and of
+    * their `n` in (entity, position) order the last `n − v`, where
+    * `t = int(0.75·n)` and `v = t + (n − t) / 2` (W5, exact integer
+    * truncation).
+    *
+    * Up to [[Ts.entityCounts]]'s cap, ONE aggregate over the real rows
+    * gives both: per entity its row count and the scaler's bounds. An
+    * entity of `r` rows has `max(0, r − seqLen + 1)` windows, so the
+    * driver knows every entity's window count and takes the split as a
+    * [[Ts.positionalTail]] filter: no position column, no checkpoint, no
+    * join. Past the cap the probe's rows are dropped, and [[Scaling.fit]]
+    * and [[Ts.globalPositionWithCount]]'s prefix sum run as before: one
+    * more pass over `real` than without the probe.
+    */
+  private[pipeline] def realTestSplit(
+      real: DataFrame,
+      schema: TsSchema,
+      seqLen: Int): (Scaling.MinMaxStats, DataFrame) = {
+    val id = schema.itemIdCols.head
+    val cols = schema.numericCols
+    def windows(stats: Scaling.MinMaxStats) = Ts.xySplit(Ts.slidingWindows(
+      stats.transform(real), id, schema.tsCol, cols, seqLen))
+    def testFrom(n: Long): Long = {
+      require(n > 0, s"TSTR real test split is empty: the real series " +
+        s"has no window of $seqLen steps")
+      val t = (0.75 * n).toLong
+      t + ((n - t) / 2)
+    }
+    Ts.entityCounts(real, id, Scaling.bounds(cols)) match {
+      case Some(rows) =>
+        val stats = Scaling.fromBounds(cols, rows, 2)
+        val perEntity = rows.map(r => r.get(0) -> math.max(0L, r.getLong(1) - seqLen + 1))
+        (stats, Ts.positionalTail(windows(stats), id, "__pos", perEntity,
+          testFrom(perEntity.map(_._2).sum)))
+      case None =>
+        val stats = Scaling.fit(real, cols)
+        val (xy, n) = Ts.globalPositionWithCount(windows(stats), id, "__pos", "__seq")
+        (stats, xy.filter(col("__seq") >= testFrom(n)))
+    }
+  }
 
   /** Rows of the frame where any of `names` is null. */
   private[pipeline] def incomplete(names: Seq[String]): Column =

@@ -1,6 +1,7 @@
 package graft.providers
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.TsSchema
@@ -125,28 +126,48 @@ object StatisticalProvider extends GeneratorProvider {
     }
   }
 
+  /** One SQL execution: a grouping-sets aggregate whose empty set holds
+    * each numeric column's mean and population std and the row count `n`,
+    * and whose set `(c)` holds each value of categorical column `c` with
+    * its count. A `row_number` per set, by count descending then value
+    * ascending (nulls first), keeps each column's 100 most frequent
+    * values before the collect; their frequencies divide by `n`, and a
+    * null category reads as "". Without categorical columns it is one
+    * global aggregate.
+    */
   def fit(data: DataFrame, schema: TsSchema): FittedGenerator = {
-    // one aggregate pass: per-column mean/std plus the row count the
-    // categorical frequencies normalize by (no separate count() scan)
-    val aggs = schema.numericCols.flatMap(c =>
-      Seq(avg(col(c)).as(s"mean_$c"), stddev_pop(col(c)).as(s"std_$c"))) :+
+    val nums = schema.numericCols
+    val cats = schema.catCols
+    val aggs = nums.flatMap(c => Seq(avg(col(c)), stddev_pop(col(c)))) :+
       count(lit(1)).as("__n")
-    val row = data.agg(aggs.head, aggs.tail: _*).head()
-    val n = row.getLong(row.length - 1).toDouble
-    val catFreqs = schema.catCols.map { c =>
-      val freqs = data.groupBy(col(c)).agg(count(lit(1)).as("__n"))
-        .orderBy(col("__n").desc, col(c))
-        .limit(100)
-        .collect()
-        .map(r => (Option(r.get(0)).map(_.toString).getOrElse(""),
-          r.getLong(1) / n)).toSeq
-      c -> freqs
+    def stats(r: Row, from: Int) = nums.zipWithIndex.map { case (c, i) =>
+      c -> ((r.getDouble(from + 2 * i), r.getDouble(from + 2 * i + 1)))
     }
-    Model(
-      schema.numericCols.zipWithIndex.map { case (c, i) =>
-        c -> ((row.getDouble(2 * i), row.getDouble(2 * i + 1)))
-      },
-      catFreqs)
+    if (cats.isEmpty) Model(stats(data.agg(aggs.head, aggs.tail: _*).head(), 0))
+    else {
+      val k = cats.size
+      val byFrequency = Window.partitionBy(col("__gid"))
+        .orderBy(col("__n").desc +: cats.map(col): _*)
+      // output: the k categorical columns, __gid, then the moments and n
+      val rows = data
+        .groupingSets(Seq.empty[Column] +: cats.map(c => Seq(col(c))), cats.map(col): _*)
+        .agg(grouping_id().as("__gid"), aggs: _*)
+        .withColumn("__rank", row_number().over(byFrequency))
+        .filter(col("__rank") <= 100)
+        .collect()
+      val (nAt, gidAt, rankAt) = (k + 1 + 2 * nums.size, k, k + 2 + 2 * nums.size)
+      // grouping_id sets the bit of every column a set does not group by,
+      // the first column's bit highest
+      val all = (1L << k) - 1
+      val moments = rows.find(_.getLong(gidAt) == all).getOrElse(
+        throw new IllegalArgumentException("StatisticalProvider.fit: no rows to fit"))
+      val n = moments.getLong(nAt).toDouble
+      Model(stats(moments, k + 1), cats.zipWithIndex.map { case (c, i) =>
+        val gid = all - (1L << (k - 1 - i))
+        c -> rows.filter(_.getLong(gidAt) == gid).sortBy(_.getInt(rankAt)).toSeq
+          .map(r => (Option(r.get(i)).map(_.toString).getOrElse(""), r.getLong(nAt) / n))
+      })
+    }
   }
 }
 
